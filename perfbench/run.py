@@ -96,7 +96,7 @@ def build(jars):
         fh.write("\n".join(files))
     t0 = time.time()
     proc = subprocess.run(
-        ["java", "-Xmx2g", "-Xss8m", "-cp",
+        ["java", "-XX:-UsePerfData", "-Xmx2g", "-Xss8m", "-cp",
          os.pathsep.join(c[0] for c in compiler), "scala.tools.nsc.Main",
          "-nowarn", "-usejavacp", "-classpath", os.path.join(jars, "*"),
          "-d", tmp, "@" + argfile],
@@ -118,7 +118,9 @@ def run_one(workload, a, jars, classes):
     work = os.path.join(BUILD, f"work-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    cmd = (["java", "-Xmx3g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1"] +
+    # -XX:-UsePerfData: no hsperfdata file in the system temp directory
+    cmd = (["java", "-XX:-UsePerfData", "-Xms1g", "-Xmx3g", "-XX:+UseG1GC",
+            "-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=256m"] +
            [x for p in JVM_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] +
            [f"-Djava.io.tmpdir={work}/tmp",
             f"-Dderby.stream.error.file={work}/derby.log",
@@ -157,7 +159,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS + ["all"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=15)
+    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
 

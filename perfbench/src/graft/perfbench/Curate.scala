@@ -7,18 +7,20 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
 /** `curate`: the LLM-data curation funnel (PII scrub → quality →
-  * exact dedup → MinHash near-dedup → winnow) over a seeded corpus of
-  * letter-permuted document shards, plus one parquet write of the
-  * curated corpus per pass. */
+  * exact dedup → MinHash near-dedup → winnow) over letter-permuted
+  * shards of one base corpus, plus one parquet write of the curated
+  * corpus per pass. The base corpus is the same for every seed, as the
+  * fixture corpus is; the seed picks the shard permutations. */
 object Curate extends Workload {
   val BaseDocs = 1000
+  val BaseSeed = 1L
   val Shards = 2
 
   /** Funnel (input, after quality, after exact, after near) and output
     * digest for the default seed, as measured on the engine at the
     * benchmark's introduction. */
   val DefaultSeedExpected: (Seq[Long], (Long, Long)) =
-    (Seq(2000L, 1166L, 1162L, 1100L), (1100L, -10907360051L))
+    (Seq(2000L, 1598L, 1590L, 1518L), (1518L, 18840904535L))
 
   private def rows(o: org.apache.spark.sql.Observation): Long =
     o.get("rows").asInstanceOf[Long]
@@ -28,7 +30,7 @@ object Curate extends Workload {
 
   /** Writes the seeded corpus to `dir` and returns it. */
   def corpus(ctx: Ctx, dir: String): DataFrame = {
-    val base = Data.frame(ctx.spark, Data.documents(ctx.seed, BaseDocs))
+    val base = Data.frame(ctx.spark, Data.documents(BaseSeed, BaseDocs))
     Data.docShards(base, ctx.seed, Shards).write.parquet(dir)
     ctx.spark.read.parquet(dir)
   }
@@ -72,14 +74,14 @@ object Curate extends Workload {
       "pipeline.after_near" -> funnel(2).toDouble)
   }
 
-  def run(ctx: Ctx): Outcome = {
+  /** The corpus is written once per set-up rep and read back. */
+  type State = DataFrame
+
+  def setup(ctx: Ctx, rep: Int): DataFrame = corpus(ctx, s"${ctx.work}/corpus$rep")
+
+  def run(ctx: Ctx, docs: DataFrame): Outcome = {
     val spark = ctx.spark
-    var docs: DataFrame = null
-    val setupS = (0 until Main.SetupReps).map { rep =>
-      val t0 = System.nanoTime()
-      docs = corpus(ctx, s"${ctx.work}/corpus$rep")
-      (System.nanoTime() - t0) / 1e9
-    }
+    val tracer = ctx.tracer
     val inputDocs = docs.count()
     var funnel = Seq.empty[Long]
     var first: Option[(Seq[Long], (Long, Long))] = None
@@ -87,11 +89,11 @@ object Curate extends Workload {
     def out(i: Int) = s"${ctx.work}/curated$i"
 
     def pass(i: Int): Unit = {
-      val oc = Pipeline.curateObserved(docs)
-      oc.curated.write.parquet(out(i))
-      funnel = Seq(oc.input, oc.afterQuality, oc.afterExact, oc.afterNear)
-        .map(rows)
-      oc.release()
+      val oc = tracer.span("pipeline.build")(Pipeline.curateObserved(docs))
+      tracer.span("pipeline.write")(oc.curated.write.parquet(out(i)))
+      funnel = tracer.span("pipeline.observe")(
+        Seq(oc.input, oc.afterQuality, oc.afterExact, oc.afterNear).map(rows))
+      tracer.span("pipeline.release")(oc.release())
     }
 
     /** Untimed: the funnel and an order-independent digest of the
@@ -119,13 +121,14 @@ object Curate extends Workload {
     val loop = PassLoop(ctx)(pass)(check)
     // serve is not among the workloads BENCHMARK.json lists, so a traced
     // curate run also serves one window of requests for serve's layers
-    val served = if (ctx.traced) Some(Serve.run(ctx)) else None
+    val served = if (ctx.traced) Some(Serve.run(ctx, Serve.setup(ctx, 0)))
+      else None
     val layers =
       if (ctx.traced)
         Curate.layers(ctx, docs) ++ (served.get.layers - "trace.overhead_share")
       else Map.empty[String, Double]
     val docsPerS = inputDocs / (Stats.median(loop.untracedMs) / 1000.0)
-    Outcome(setupS, loop.untracedMs, loop.tracedMs, docsPerS,
+    Outcome(loop.untracedMs, loop.tracedMs, loop.tracedMs.size, docsPerS,
       Seq(("curate_docs_per_s", docsPerS, "docs/s")),
       attempted = loop.attempted + served.fold(0L)(_.attempted),
       failed = loop.failed + served.fold(0L)(_.failed),

@@ -6,25 +6,49 @@ import org.apache.spark.sql.SparkSession
 
 /** What a workload hands to its set-up and passes. `nproc` is the
   * local executor slot count; `work` is a scratch directory that the
-  * launcher removes when the run ends. */
+  * launcher removes when the run ends. `counters` exist only in a
+  * traced run, and listen only while a traced operation runs. */
 final case class Ctx(spark: SparkSession, seed: Long, seconds: Int,
     traced: Boolean, work: String, nproc: Int, tracer: Tracer,
     counters: Option[ExecutorCounters]) {
   /** Whether operation `i` records spans: in a traced run every other
     * operation does, so the untraced ones give the overhead baseline. */
   def tracedOp(i: Int): Boolean = traced && i % 2 == 0
+
+  /** Runs `body` with the executor counters listening, and waits until
+    * they have seen its jobs' events. Both costs fall inside `body`'s
+    * time, so traced operations carry the whole cost of tracing. */
+  def listening[T](body: => T): T = counters match {
+    case None => body
+    case Some(c) =>
+      val sc = spark.sparkContext
+      sc.addSparkListener(c)
+      try {
+        val r = body
+        org.apache.spark.ListenerDrain(sc)
+        r
+      } finally sc.removeSparkListener(c)
+  }
 }
 
 /** One workload's measurements. `opMs` are the untraced operations'
-  * latencies (passes or requests), `tracedOpMs` the traced ones;
+  * latencies (passes or requests), `tracedOpMs` the traced ones, and
+  * `listenedOps` the number of operations the executor counters saw;
   * `named` are the workload's own end-to-end figures. */
-final case class Outcome(setupS: Seq[Double], opMs: Seq[Double],
-    tracedOpMs: Seq[Double], itemsPerS: Double,
+final case class Outcome(opMs: Seq[Double], tracedOpMs: Seq[Double],
+    listenedOps: Int, itemsPerS: Double,
     named: Seq[(String, Double, String)], attempted: Long, failed: Long,
     heapPeakMb: Double, layers: Map[String, Double])
 
+/** A workload sets up its inputs (`setup`, timed, repeated once per
+  * set-up rep, each time on a fresh session) and then measures its
+  * operations on the last set-up's state (`run`). `release` frees a
+  * set-up's state that outlives its session, untimed. */
 trait Workload {
-  def run(ctx: Ctx): Outcome
+  type State
+  def setup(ctx: Ctx, rep: Int): State
+  def run(ctx: Ctx, state: State): Outcome
+  def release(state: State): Unit = ()
 }
 
 object Stats {
@@ -37,6 +61,29 @@ object Stats {
     s(lo) + (s(hi) - s(lo)) * (pos - lo)
   }
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+}
+
+/** CPU time the hypervisor gave this machine's CPUs to someone else
+  * (steal), from /proc/stat where it exists: with the load average and
+  * the process's CPU time, it shows whether other load slowed a run. */
+object Host {
+  final case class Sample(stealTicks: Long, totalTicks: Long) {
+    /** Share of the machine's CPU time stolen since `from`. */
+    def stealShareSince(from: Sample): Double =
+      if (totalTicks == from.totalTicks) 0.0
+      else (stealTicks - from.stealTicks).toDouble / (totalTicks - from.totalTicks)
+  }
+
+  def sample(): Sample = {
+    val ticks =
+      try {
+        val src = scala.io.Source.fromFile("/proc/stat")
+        val cpu = try src.getLines().next() finally src.close()
+        cpu.trim.split("\\s+").drop(1).map(_.toLong)
+      } catch { case _: java.io.IOException => Array.empty[Long] }
+    val steal = if (ticks.length > 7) ticks(7) else 0L
+    Sample(steal, ticks.take(8).sum)
+  }
 }
 
 object Heap {
@@ -53,20 +100,27 @@ object Heap {
   }
 }
 
-/** Runs a measured loop of passes: one untimed warm-up pass, then
+/** Runs a measured loop of passes: untimed warm-up passes, then
   * passes while the next one is expected to end within `seconds` (at
-  * least `minPasses`). `check(i)` runs untimed after each pass, warm-up
+  * least `minPasses`). `check(i)` runs untimed after each pass, warm-ups
   * included, and tells whether every correctness gate held; the live
-  * heap is sampled after it. */
+  * heap is sampled after it. In a traced run, every other pass records
+  * spans and runs with the executor counters listening. */
 object PassLoop {
   final case class Result(untracedMs: Seq[Double], tracedMs: Seq[Double],
       attempted: Long, failed: Long, heapPeakMb: Double)
 
+  /** Untimed warm-up passes, numbered -Warmups to -1. */
+  val Warmups = 2
+
   def apply(ctx: Ctx, minPasses: Int = 3)(pass: Int => Unit)(
       check: Int => Boolean): Result = {
     ctx.tracer.enabled = false
-    pass(-1)
-    var failed = if (check(-1)) 0L else 1L
+    var failed = 0L
+    (-Warmups until 0).foreach { i =>
+      pass(i)
+      if (!check(i)) failed += 1
+    }
     val untraced = Seq.newBuilder[Double]
     val traced = Seq.newBuilder[Double]
     var heap = Heap.liveMb()
@@ -75,26 +129,29 @@ object PassLoop {
     var i = 0
     while (i < minPasses ||
         System.nanoTime() + (System.nanoTime() - t0) / i < deadline) {
-      ctx.tracer.enabled = ctx.tracedOp(i)
+      val tracedOp = ctx.tracedOp(i)
+      ctx.tracer.enabled = tracedOp
       val p0 = System.nanoTime()
-      ExecutorCounters.tagged(ctx.spark.sparkContext, "perfbench.op", s"pass:$i")(
-        pass(i))
+      ExecutorCounters.tagged(ctx.spark.sparkContext, "perfbench.op", s"pass:$i") {
+        if (tracedOp) ctx.listening(pass(i)) else pass(i)
+      }
       val ms = (System.nanoTime() - p0) / 1e6
-      if (ctx.tracedOp(i)) traced += ms else untraced += ms
+      if (tracedOp) traced += ms else untraced += ms
       if (!check(i)) failed += 1
       ctx.tracer.enabled = false
       heap = math.max(heap, Heap.liveMb())
       i += 1
     }
-    Result(untraced.result(), traced.result(), i + 1L, failed, heap)
+    Result(untraced.result(), traced.result(), i.toLong + Warmups, failed, heap)
   }
 }
 
 object Main {
   /** The seed whose curate funnel is stored; 7 is the held-out seed. */
   val DefaultSeed = 1L
-  /** Set-ups per run; `setup_s` reports their median. */
-  val SetupReps = 2
+  /** Set-ups per run, each on a fresh session; `setup_s` reports their
+    * median. The first runs on a cold JVM. */
+  val SetupReps = 7
 
   /** Every per-layer metric with its unit, printed in every traced run
     * (0 where the workload never calls that layer). */
@@ -154,57 +211,70 @@ object Main {
       case other => sys.error(s"unknown workload $other")
     }
 
-    val t0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$nproc]")
-      .appName(s"perfbench-$workload")
-      .config("spark.sql.shuffle.partitions", nproc.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.local.dir", s"$work/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sessionS = (System.nanoTime() - t0) / 1e9
+    def session(rep: Int): SparkSession = {
+      val spark = SparkSession.builder()
+        .master(s"local[$nproc]")
+        .appName(s"perfbench-$workload")
+        .config("spark.sql.shuffle.partitions", nproc.toString)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", s"$work/warehouse$rep")
+        .config("spark.local.dir", s"$work/spark-local")
+        .getOrCreate()
+      spark.sparkContext.setLogLevel("WARN")
+      spark
+    }
     val tracer = new Tracer
-    val counters = if (traced) {
-      val c = new ExecutorCounters
-      spark.sparkContext.addSparkListener(c)
-      Some(c)
-    } else None
-    val ctx = Ctx(spark, seed, seconds, traced, work, nproc, tracer, counters)
+    val counters = if (traced) Some(new ExecutorCounters) else None
+    // each set-up rep starts a fresh session and builds the workload's
+    // inputs; the previous rep's session and state are released untimed
+    var ctx: Ctx = null
+    var state: Option[wl.State] = None
+    val setupS = (0 until SetupReps).map { rep =>
+      if (ctx != null) {
+        state.foreach(wl.release)
+        ctx.spark.stop()
+      }
+      val t0 = System.nanoTime()
+      ctx = Ctx(session(rep), seed, seconds, traced, work, nproc, tracer,
+        counters)
+      state = Some(wl.setup(ctx, rep))
+      (System.nanoTime() - t0) / 1e9
+    }
+    val spark = ctx.spark
     val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-    val out = wl.run(ctx)
+    val host0 = Host.sample()
+    val out = wl.run(ctx, state.get)
+    val stealShare = Host.sample().stealShareSince(host0)
+    wl.release(state.get)
     val loadavg = os.getSystemLoadAverage
     val cpuS = os.getProcessCpuTime / 1e9
-    val setupS = sessionS + Stats.median(out.setupS)
+    val setupMedianS = Stats.median(setupS)
     val failedShare = out.failed.toDouble / out.attempted
     val e2e = Seq(
-      ("setup_s", setupS, "s"),
+      ("setup_s", setupMedianS, "s"),
       ("throughput_per_s", out.itemsPerS, "1/s"),
       ("latency_p50_ms", Stats.median(out.opMs), "ms"),
-      ("latency_p90_ms", Stats.quantile(out.opMs, 0.9), "ms"),
       ("heap_peak_mb", out.heapPeakMb, "MB"))
 
-    val named = Seq(("setup_s", setupS, "s")) ++ out.named ++ Seq(
+    val named = Seq(("setup_s", setupMedianS, "s")) ++ out.named ++ Seq(
       ("heap_peak_mb", out.heapPeakMb, "MB"),
       ("failed_share", failedShare, "share"))
     println(s"[perfbench] workload=$workload seed=$seed " +
       s"ops=${out.opMs.size + out.tracedOpMs.size} " +
       named.map { case (n, v, u) => f"$n=$v%.4f $u" }.mkString(", ") +
-      f", host.loadavg=$loadavg%.2f, process_cpu_s=$cpuS%.1f" +
-      s", setup_reps_s=${out.setupS.map(s => f"$s%.2f").mkString("/")}" +
+      f", host.loadavg=$loadavg%.2f, host.steal_share=$stealShare%.3f" +
+      f", process_cpu_s=$cpuS%.1f" +
+      s", setup_reps_s=${setupS.map(s => f"$s%.2f").mkString("/")}" +
       s", op_ms=${out.opMs.map(m => f"$m%.0f").mkString("/")}" +
-      f", session_start_s=$sessionS%.2f")
+      s", traced_op_ms=${out.tracedOpMs.map(m => f"$m%.0f").mkString("/")}")
 
     val metrics =
       if (!traced) e2e.map { case (n, v, u) => n -> (v, u) }
       else {
-        val sc = spark.sparkContext
-        org.apache.spark.ListenerDrain(sc)
-        val ops = math.max(1, out.opMs.size + out.tracedOpMs.size).toDouble
+        val ops = math.max(1, out.listenedOps).toDouble
         val c = counters.get
         // serve's requests are tagged tpch:/ann:, passes pass:
         val cls = if (workload == "serve") "" else "pass."

@@ -125,21 +125,23 @@ object Migrate extends Workload {
     metas.map(m => m.name -> (m.primaryKey,
       m.foreignKeys.map(f => (f.columns, f.refTable, f.refColumns)).toSet)).toMap
 
-  def run(ctx: Ctx): Outcome = {
+  /** A loaded source database: its URL, the (min, max) of each table's
+    * partition column and the total row count. */
+  final case class State(srcUrl: String, bounds: Map[String, (Long, Long)],
+      sourceRows: Long)
+
+  def setup(ctx: Ctx, rep: Int): State = {
+    val url = s"jdbc:derby:memory:pbsrc$rep"
+    val tables = Data.star(ctx.seed, Data.scale(Sf))
+    State(url, loadSource(url, tables, ctx.seed), tables.map(_.rows.size.toLong).sum)
+  }
+
+  override def release(state: State): Unit = dropDb(state.srcUrl)
+
+  def run(ctx: Ctx, state: State): Outcome = {
     val spark = ctx.spark
     val props = new Properties()
-    val srcUrlOf = (i: Int) => s"jdbc:derby:memory:pbsrc$i"
-    var bounds = Map.empty[String, (Long, Long)]
-    var sourceRows = 0L
-    val setupS = (0 until Main.SetupReps).map { rep =>
-      val t0 = System.nanoTime()
-      if (rep > 0) dropDb(srcUrlOf(rep - 1))
-      val tables = Data.star(ctx.seed, Data.scale(Sf))
-      bounds = loadSource(srcUrlOf(rep), tables, ctx.seed)
-      sourceRows = tables.map(_.rows.size.toLong).sum
-      (System.nanoTime() - t0) / 1e9
-    }
-    val srcUrl = srcUrlOf(Main.SetupReps - 1)
+    val State(srcUrl, bounds, sourceRows) = state
     val srcMetas = {
       val c = DriverManager.getConnection(srcUrl)
       try PgCatalog.reflectSchema(c, Some(Schema)) finally c.close()
@@ -227,12 +229,11 @@ object Migrate extends Workload {
       failedTables + mismatches == 0
     }
 
-    DriverManager.getConnection(tgtUrl(-1) + ";create=true").close()
+    DriverManager.getConnection(tgtUrl(-PassLoop.Warmups) + ";create=true").close()
     val loop = PassLoop(ctx)(pass)(check)
-    val c = ctx.counters
-    c.foreach(_ => org.apache.spark.ListenerDrain(sc))
+    // the counters listened to the traced passes only
     val traced = math.max(1, loop.tracedMs.size).toDouble
-    val stageWrite = c.fold(0L)(_.get("scope.stage_write_ms")).toDouble
+    val stageWrite = ctx.counters.fold(0L)(_.get("scope.stage_write_ms")) / traced
     val layers = Map(
       "pg.reflect_ms" -> tracer.totalMs("pg.reflect") / traced,
       "pg.ddl_statements" -> tracer.counter("pg.ddl_statements").toDouble / loop.attempted,
@@ -240,16 +241,14 @@ object Migrate extends Workload {
       "pg.seqsync_ms" -> tracer.totalMs("pg.seqsync") / traced,
       "etl.copy_ms" -> tracer.totalMs("etl.copy") / traced,
       "etl.copy_ms.lineitem" -> tracer.totalMs("etl.copy.lineitem") / traced,
-      "etl.stage_write_ms" -> stageWrite / loop.attempted,
-      "etl.publish_ms" -> (tracer.totalMs("etl.atomic_load") / traced -
-        stageWrite / loop.attempted),
+      "etl.stage_write_ms" -> stageWrite,
+      "etl.publish_ms" -> (tracer.totalMs("etl.atomic_load") / traced - stageWrite),
       "etl.verify_ms" -> tracer.totalMs("etl.verify") / traced,
       "etl.source_reads" -> tracer.counter("etl.source_reads").toDouble / loop.attempted,
       "etl.rows_written" -> rowsWritten.toDouble / loop.attempted)
-    dropDb(srcUrl)
-    dropDb(tgtUrl(loop.attempted.toInt - 1))
+    dropDb(tgtUrl(loop.untracedMs.size + loop.tracedMs.size))
     val rowsPerS = sourceRows / (Stats.median(loop.untracedMs) / 1000.0)
-    Outcome(setupS, loop.untracedMs, loop.tracedMs, rowsPerS,
+    Outcome(loop.untracedMs, loop.tracedMs, loop.tracedMs.size, rowsPerS,
       Seq(("migrate_rows_per_s", rowsPerS, "rows/s")),
       attempted = loop.attempted, failed = loop.failed,
       heapPeakMb = loop.heapPeakMb, layers = layers)

@@ -53,30 +53,32 @@ object Serve extends Workload with AdaptiveSparkPlanHelper {
     s
   }
 
-  def run(ctx: Ctx): Outcome = {
-    val spark = ctx.spark
-    var dir = ""
-    var index: Ivf.Index = null
-    var pool: Array[Array[Float]] = null
-    var truth: Array[Set[Long]] = null
-    val setupS = (0 until Main.SetupReps).map { rep =>
-      val t0 = System.nanoTime()
-      dir = s"${ctx.work}/serve$rep"
-      val emb = Data.embeddings(ctx.seed, Vectors)
-      Data.writeParquet(spark, dir, Data.star(ctx.seed, Data.scale(Sf)) :+ emb)
-      Tables.bucketedFacts(spark, dir)
-      index = Ivf.persistedIndex(spark, dir, s"${ctx.work}/ivf$rep")
-      val vecs = emb.rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      val r = new Random(ctx.seed ^ 0xa11L)
-      pool = Array.fill(QueryPool) {
-        val base = vecs(r.nextInt(vecs.size))._2
-        Data.unit(base.map(_ + 0.05 * r.nextGaussian())).map(_.toFloat)
-      }
-      truth = pool.map(q => vecs.sortBy { case (id, v) => (-cosine(v, q), id) }
-        .take(TopK).map(_._1).toSet)
-      (System.nanoTime() - t0) / 1e9
-    }
+  /** Parquet star and embeddings, bucketed fact layout, IVF index,
+    * query vectors and their exact top-10. */
+  final case class State(dir: String, index: Ivf.Index,
+      pool: Array[Array[Float]], truth: Array[Set[Long]])
 
+  def setup(ctx: Ctx, rep: Int): State = {
+    val spark = ctx.spark
+    val dir = s"${ctx.work}/serve$rep"
+    val emb = Data.embeddings(ctx.seed, Vectors)
+    Data.writeParquet(spark, dir, Data.star(ctx.seed, Data.scale(Sf)) :+ emb)
+    Tables.bucketedFacts(spark, dir)
+    val index = Ivf.persistedIndex(spark, dir, s"${ctx.work}/ivf$rep")
+    val vecs = emb.rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val r = new Random(ctx.seed ^ 0xa11L)
+    val pool = Array.fill(QueryPool) {
+      val base = vecs(r.nextInt(vecs.size))._2
+      Data.unit(base.map(_ + 0.05 * r.nextGaussian())).map(_.toFloat)
+    }
+    val truth = pool.map(q => vecs.sortBy { case (id, v) => (-cosine(v, q), id) }
+      .take(TopK).map(_._1).toSet)
+    State(dir, index, pool, truth)
+  }
+
+  def run(ctx: Ctx, state: State): Outcome = {
+    val spark = ctx.spark
+    val State(dir, index, pool, truth) = state
     // reference digests, which also warm every query path once
     val expected = Queries.map(q =>
       q -> digest(SparkEntry.queries(q)(spark, dir).collect())).toMap
@@ -144,8 +146,12 @@ object Serve extends Workload with AdaptiveSparkPlanHelper {
         }
       }, s"perfbench-client-$c")
     }
-    clients.foreach(_.start())
-    clients.foreach(_.join())
+    // the counters listen to the whole window: with two concurrent
+    // clients they cannot be attached per traced request
+    ctx.listening {
+      clients.foreach(_.start())
+      clients.foreach(_.join())
+    }
     val windowS = (System.nanoTime() - t0) / 1e9
     val heap = math.max(heapAtStart, Heap.liveMb())
 
@@ -173,7 +179,6 @@ object Serve extends Workload with AdaptiveSparkPlanHelper {
       ("serve_ann_requests", ann.size.toDouble, "count"))
 
     val layers = ctx.counters.fold(Map.empty[String, Double]) { c =>
-      org.apache.spark.ListenerDrain(sc)
       val tt = tpch.filter(_.traced)
       def mean(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else xs.sum / xs.size
       Map(
@@ -188,11 +193,12 @@ object Serve extends Workload with AdaptiveSparkPlanHelper {
           c.get("ann.input_records").toDouble / math.max(1, ann.size),
         "ops.ivf.cells_probed" -> mean(ann.map(_.cells.toDouble)),
         "ops.ivf.recall_at_10" -> recall,
-        // like for like: the ann class, traced against untraced
+        // like for like: the ann class, traced against untraced; the
+        // counters listened to both, so this is the spans' cost only
         "trace.overhead_share" -> (pct(ann.filter(_.traced), 0.5) /
           pct(ann.filterNot(_.traced), 0.5) - 1.0))
     }
-    Outcome(setupS, untraced.map(_.ms), reqs.filter(_.traced).map(_.ms),
+    Outcome(untraced.map(_.ms), reqs.filter(_.traced).map(_.ms), reqs.size,
       reqs.size / windowS, named, attempted = reqs.size + 1L,
       failed = failedReqs + recallFailed, heapPeakMb = heap, layers = layers)
   }
