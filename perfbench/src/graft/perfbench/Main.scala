@@ -150,8 +150,10 @@ object Main {
   /** The seed whose curate funnel is stored; 7 is the held-out seed. */
   val DefaultSeed = 1L
   /** Set-ups per run, each on a fresh session; `setup_s` reports their
-    * median. The first runs on a cold JVM. */
-  val SetupReps = 7
+    * median. The first runs on a cold JVM, and the next two or three are
+    * still 10–40% slower while the JIT compiles the set-up path; with 7
+    * reps the median often fell on one of those. */
+  val SetupReps = 11
 
   /** Every per-layer metric with its unit, printed in every traced run
     * (0 where the workload never calls that layer). */
