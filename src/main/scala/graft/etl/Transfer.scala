@@ -48,9 +48,9 @@ object Transfer {
     * batchsize=1000 matches the reference's chunk_size so measured
     * speedup is batching+parallelism, not bigger pages (BASELINE.md). */
   def writeJdbc(df: DataFrame, url: String, table: String,
-      props: Properties, batchSize: Int = 1000): Unit =
+      props: Properties): Unit =
     df.write.mode(SaveMode.Append)
-      .option("batchsize", batchSize.toString)
+      .option("batchsize", "1000")
       .jdbc(url, table, props)
 
   /** All-or-nothing publish: batched write into a staging table named
@@ -58,8 +58,7 @@ object Transfer {
     * transactional INSERT INTO target. The staging write can retry/fail
     * freely; the target only ever sees zero or all rows. */
   def atomicLoad(df: DataFrame, url: String, targetTable: String,
-      props: Properties, connFactory: () => Connection,
-      batchSize: Int = 1000): Unit = {
+      props: Properties, connFactory: () => Connection): Unit = {
     // a pre-quoted target ("t", the convention for Spark-created
     // case-sensitive names) gets the suffix INSIDE the quotes
     val staging =
@@ -73,7 +72,7 @@ object Transfer {
       try c.createStatement().executeUpdate(s"DROP TABLE $staging")
       catch { case NonFatal(_) => () } finally c.close()
     }
-    writeJdbc(df, url, staging, props, batchSize)
+    writeJdbc(df, url, staging, props)
     val conn = connFactory()
     try {
       conn.setAutoCommit(false)
@@ -122,30 +121,6 @@ object Transfer {
       case NonFatal(e) => conn.rollback(); throw e
     } finally conn.close()
   }
-
-  /** Generic per-table copy with exclusion (R6) and per-table
-    * error-isolation (R11: the reference logs and continues;
-    * engine form returns a result report instead of throwing).
-    *
-    * `countRows=false` skips the per-table count: the count is a second
-    * full scan of the SOURCE (for a JDBC source that doubles the load
-    * on the database this module exists to protect) and can disagree
-    * with the written rows if the source changes between scans —
-    * callers wanting an exact written count should count the target. */
-  def copyTables(tables: Seq[String], exclude: Set[String],
-      read: String => DataFrame,
-      write: (String, DataFrame) => Unit,
-      countRows: Boolean = true): Seq[TransferResult] =
-    tables.filterNot(exclude).map { t =>
-      try {
-        val df = read(t)
-        write(t, df)
-        TransferResult(t, if (countRows) df.count() else -1L, ok = true)
-      } catch {
-        case NonFatal(e) =>
-          TransferResult(t, 0L, ok = false, Some(e.getMessage))
-      }
-    }
 
   /** Oracle-checked round-trip checksum (the reference's implied
     * source/target-equivalence oracle, SURVEY.md §5): transfer the
@@ -332,7 +307,12 @@ object Transfer {
     * fallback (transfer_data_with_constraints_script.py:193-197);
     * phase 1 here creates every selected table up front
     * (IF NOT EXISTS), so that fallback has no work left to do and is
-    * deliberately not replicated. */
+    * deliberately not replicated.
+    *
+    * `exclude` holds qualified names kept out of every phase (R6).
+    * Errors are isolated per table (R11): one [[TransferResult]] per
+    * selected table, `ok = false` with the first error if its copy,
+    * an FK or its sequence sync failed. */
   def migrate(metas: Seq[TableMeta], exclude: Set[String],
       execDdl: String => Unit,
       read: TableMeta => DataFrame,
@@ -347,51 +327,52 @@ object Transfer {
     // doubling source I/O at migration scale (VERDICT r10 #1).
     // CONTRACT (same as curateObserved): `write` must execute exactly
     // one Spark action over the frame it is given — every real sink
-    // (JDBC batch insert, parquet, noop) does; Observation.get then
-    // returns the already-collected metric without blocking.
+    // (JDBC batch insert, parquet, noop) does.
     val results = selected.map { m =>
       try {
         val df = read(m)
         val obs = new org.apache.spark.sql.Observation()
         write(m, df.observe(obs, org.apache.spark.sql.functions.count(
           lit(1)).as("rows")))
-        // obs.get is the only public accessor and it BLOCKS; once
-        // `write` has returned, the action either already ran (get
-        // returns instantly) or never will — so a bounded wait turns
-        // a zero-action writer into a loud per-table error instead of
-        // an indefinite hang inside this try (ADVICE r11). The
-        // timed-out waiter thread is daemon and leaks only on misuse.
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val metrics =
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get),
-            scala.concurrent.duration.Duration(30, "s"))
-          catch { case _: java.util.concurrent.TimeoutException =>
-            throw new IllegalStateException(
-              s"migrate(${m.qualifiedName}): no observed metrics " +
-                "after 30s — the supplied `write` must run exactly " +
-                "one Spark action over the frame it is given")
-          }
+        // once `write` has returned, the action either already ran
+        // (the future is complete) or never will — so a bounded wait
+        // turns a zero-action writer into a loud per-table error
+        // instead of an indefinite hang inside this try
+        try scala.concurrent.Await.ready(obs.future,
+          scala.concurrent.duration.Duration(30, "s"))
+        catch { case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"migrate(${m.qualifiedName}): no observed metrics " +
+              "after 30s — the supplied `write` must run exactly " +
+              "one Spark action over the frame it is given")
+        }
         TransferResult(m.qualifiedName,
-          metrics("rows").asInstanceOf[Long], ok = true)
+          obs.get("rows").asInstanceOf[Long], ok = true)
       } catch {
         case NonFatal(e) =>
           TransferResult(m.qualifiedName, 0L, ok = false, Some(e.getMessage))
       }
     }
-    // phase 3: FKs (per-FK isolation like reference :163-171)
-    selected.foreach { m =>
-      PgDdl.addForeignKeys(m).foreach { sql =>
-        try execDdl(sql) catch { case NonFatal(_) => () }
+    // phases 3–4 isolate each statement like the reference (:163-171):
+    // a failure does not stop the rest, but marks its table's result
+    // failed with the first error, so ok = true means fully migrated
+    val failed = scala.collection.mutable.Map.empty[String, String]
+    def isolated(m: TableMeta)(run: => Unit): Unit =
+      try run catch { case NonFatal(e) =>
+        failed.getOrElseUpdate(m.qualifiedName, e.getMessage): Unit
       }
+    // phase 3: FKs
+    selected.foreach { m =>
+      PgDdl.addForeignKeys(m).foreach(sql => isolated(m)(execDdl(sql)))
     }
     // phase 4: sequence sync (reference EP3)
     selected.foreach { m =>
-      if (m.serialColumns.nonEmpty) {
-        try SequenceSync.syncStatements(m, read(m)).foreach(execDdl)
-        catch { case NonFatal(_) => () }
-      }
+      if (m.serialColumns.nonEmpty)
+        isolated(m)(SequenceSync.syncStatements(m, read(m)).foreach(execDdl))
     }
-    results
+    results.map(r => failed.get(r.table) match {
+      case Some(e) if r.ok => r.copy(ok = false, error = Some(e))
+      case _ => r
+    })
   }
 }

@@ -403,9 +403,9 @@ object Dedup extends SetSimJoins with SetSimIndexing
   // otherwise each distinct input corpus would pin its signature cache
   // for the JVM lifetime. Runs needing per-call lifecycle build the
   // signature table themselves and unpersist exactly that frame
-  // (nearDupPairs' sigsOpt; Pipeline.curate does this), since this
-  // registry is JVM-global: draining it mid-flight would strip another
-  // concurrent run's cache.
+  // (nearDupPairs' sigsOpt; Pipeline.curateObserved does this), since
+  // this registry is JVM-global: draining it mid-flight would strip
+  // another concurrent run's cache.
   private val cached =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
@@ -449,9 +449,10 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * same materialized frame. */
   def nearDupPairs(df: DataFrame, idCol: String, minJaccard: Double,
       sigsOpt: Option[DataFrame] = None): DataFrame = {
-    // callers that need deterministic cache lifecycle (Pipeline.curate)
-    // build the signature table themselves, pass it here, and
-    // unpersist exactly that frame once their results materialize
+    // callers that need deterministic cache lifecycle
+    // (Pipeline.curateObserved) build the signature table themselves,
+    // pass it here, and unpersist exactly that frame once their
+    // results materialize
     val sigs = sigsOpt.getOrElse(signatureTable(df, idCol))
     val estimated = estimatePrune(lshCandidatePairs(sigs, idCol),
       sigs, sigs, "doc_a", "doc_b", minJaccard)

@@ -118,7 +118,7 @@ object Ranking {
     *
     * Docs with < 3 tokens have no trigrams and are excluded (a
     * length filter catches them long before a fluency ranking at
-    * pipeline level — Pipeline.curate's quality gate).
+    * pipeline level — Pipeline.curateObserved's quality gate).
     *
     * Scale shape: one trigram explode feeding a corpus aggregate
     * (the LM table — at 100 TB this is the precomputed/persisted

@@ -37,8 +37,8 @@ object TextAnalysis {
   }
 
   /** Composite quality score in [0,1] — THE scoring expression, shared
-    * by qualityStats (rounded, oracle-checked) and Pipeline.curate
-    * (raw, as a filter) so the two can't drift. */
+    * by qualityStats (rounded, oracle-checked) and
+    * Pipeline.curateObserved (raw, as a filter) so the two can't drift. */
   /** English stopword-token count — `size(filter(split(text, ' '),
     * tk -> tk IN (markers)))` as the native token_in_set_count kernel
     * (NativeCountsSpec differential; the per-token isin lambda ran

@@ -31,7 +31,10 @@ class PipelineSpec extends SparkSpec {
     assert(curated.filter(length(col("content_hash")) =!= 64).count() == 0)
   }
 
-  test("exact near-dedup mode curates the same corpus as LSH on planted fixtures") {
+  test("PPJoin setSimJoin and LSH nearDupPairs find the same planted near pairs") {
+    // the exact prefix join answers the same question as the MinHash
+    // generator over the same shingle sets; on planted fixtures the
+    // two pair sets must agree
     val good = "the catalyst optimizer rewrites logical plans into " +
       "physical plans of the engine and a broadcast join is the fast path"
     val docs = Seq(
@@ -41,14 +44,15 @@ class PipelineSpec extends SparkSpec {
       (5L, "the quick brown fox jumps over a lazy dog and the day is long " +
         "and of the morning a walk to the river is the best of plans"))
       .toDF("doc_id", "text")
-    def idsOf(exactMode: Boolean) =
-      Pipeline.curate(docs, minQuality = 0.4, nearDupJaccard = 0.7,
-        exactNearDup = exactMode)._1
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    val lsh = idsOf(exactMode = false)
-    val ex = idsOf(exactMode = true)
-    assert(ex == lsh, s"exact=$ex lsh=$lsh")
-    assert(ex == Set(1L, 5L))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      val ex = pairs(ops.Dedup.setSimJoin(docs, "doc_id", 700000L))
+      val lsh = pairs(ops.Dedup.nearDupPairs(docs, "doc_id", 0.7))
+      assert(ex == lsh, s"exact=$ex lsh=$lsh")
+      assert(ex == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+    } finally ops.Dedup.unpersistCaches()
   }
 
   test("curation scrubs PII and applies deterministic stratified sampling") {
@@ -89,8 +93,15 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("observed curation: funnel metrics from ONE action equal the counted funnel") {
-    val docs = Tables.documents(spark, sf)
-    val (_, counted) = Pipeline.curate(docs)
+    // plant exact copies (new ids) so the exact-dedup stage has work
+    val base = Tables.documents(spark, sf)
+    val docs = base.unionByName(base.filter(col("doc_id") % 25 === 0)
+      .withColumn("doc_id", col("doc_id") + 1000000L))
+    // the funnel's first two stages, counted here with their own actions
+    graft.functions.GraftFunctions.register(spark)
+    val scored = docs
+      .withColumn("text", graft.etl.Sanitize.redactPii(col("text")))
+      .filter(ops.TextAnalysis.qualityScore(col("text")) >= 0.5)
     val obs = Pipeline.curateObserved(docs)
     try {
       // the single action — everything (persists included) materializes
@@ -98,10 +109,13 @@ class PipelineSpec extends SparkSpec {
       obs.curated.write.format("noop").mode("overwrite").save()
       def rows(o: org.apache.spark.sql.Observation): Long =
         o.get("rows").asInstanceOf[Long]
-      assert(rows(obs.input) == counted.input)
-      assert(rows(obs.afterQuality) == counted.afterQuality)
-      assert(rows(obs.afterExact) == counted.afterExact)
-      assert(rows(obs.afterNear) == counted.afterNear)
+      assert(rows(obs.input) == docs.count())
+      assert(rows(obs.afterQuality) == scored.count())
+      assert(rows(obs.afterExact) ==
+        scored.select(sha2(col("text"), 256)).distinct().count())
+      assert(rows(obs.afterNear) == obs.curated.count())
+      assert(rows(obs.afterExact) < rows(obs.afterQuality), "exact dedup removed nothing")
+      assert(rows(obs.afterNear) < rows(obs.afterExact), "near-dedup removed nothing")
       // the bonus data-quality metric rides the same action
       assert(obs.afterQuality.get("avg_quality").asInstanceOf[Double] >= 0.5)
     } finally obs.release()

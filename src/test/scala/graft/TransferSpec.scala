@@ -19,20 +19,31 @@ class TransferSpec extends SparkSpec {
     p
   }
 
-  test("parquet copy preserves the row multiset and honors exclusion") {
+  test("migrate copies to parquet intact and keeps an excluded table out of every phase") {
+    import graft.meta.{ColumnMeta, TableMeta}
+    import org.apache.spark.sql.types.LongType
     val out = Files.createTempDirectory("graft_copy").toString
-    val results = Transfer.copyTables(
-      tables = Seq("nation", "region", "customer"),
-      exclude = Set("region"),
-      read = Tables(spark, sf, _),
-      write = (t, df) => df.write.parquet(s"$out/$t.parquet"))
-    assert(results.map(_.table) == Seq("nation", "customer"))
+    val customer = TableMeta(Some("public"), "customer",
+      columns = Seq(ColumnMeta("c_custkey", LongType, nullable = false)))
+    val excluded = Fixtures.analyticsEvent
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    val reads = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = Transfer.migrate(Seq(excluded, customer),
+      exclude = Set(excluded.qualifiedName),
+      execDdl = ddl += _,
+      read = { m => reads += m.name; Tables.customer(spark, sf) },
+      write = (m, df) => df.write.parquet(s"$out/${m.name}.parquet"))
+    assert(results.map(_.table) == Seq("public.customer"))
     assert(results.forall(_.ok))
+    assert(reads.toSeq == Seq("customer"))
+    assert(ddl.nonEmpty && !ddl.exists(_.contains(excluded.name)),
+      s"DDL for the excluded table: $ddl")
+    assert(!new java.io.File(s"$out/${excluded.name}.parquet").exists())
     // multiset equality: except in both directions is empty
     val src = Tables.customer(spark, sf)
     val dst = spark.read.parquet(s"$out/customer.parquet")
+    assert(results.head.rows == src.count())
     assert(src.exceptAll(dst).isEmpty && dst.exceptAll(src).isEmpty)
-    assert(!new java.io.File(s"$out/region.parquet").exists())
   }
 
   test("partitioned write keeps the multiset for any partition count") {
@@ -343,5 +354,29 @@ class TransferSpec extends SparkSpec {
     assert(results.head.ok && results.head.rows == 2)
     assert(acc.value == 2L,
       s"expected one scan of 2 rows, saw ${acc.value} row-reads")
+  }
+
+  test("migrate marks a table failed when an FK statement fails, and carries on") {
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    var fkTried = 0
+    val data = Seq((1L, "e1"), (2L, "e2")).toDF("id", "name")
+    val results = Transfer.migrate(Seq(Fixtures.analyticsEvent),
+      exclude = Set.empty,
+      execDdl = { sql =>
+        if (sql.contains("FOREIGN KEY")) {
+          fkTried += 1
+          throw new java.sql.SQLException(s"fk refused: ${sql.take(40)}")
+        }
+        ddl += sql
+      },
+      read = _ => data,
+      write = (_, d) => d.write.format("noop").mode("overwrite").save())
+    val r = results.head
+    // the rows were copied, but the table is not fully migrated
+    assert(r.rows == 2 && !r.ok)
+    assert(r.error.exists(_.startsWith("fk refused: ALTER TABLE")), r.error)
+    // per-statement isolation: every FK was tried, the sync still ran
+    assert(fkTried == 3)
+    assert(ddl.last.contains("setval"))
   }
 }
