@@ -88,7 +88,6 @@ object Pipeline {
     // 1. narrow stages first: PII scrub (pure regexp projections) and
     // quality filter (shared scoring expression) shrink/clean the
     // corpus before anything shuffles
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val scrubbed = docs.observe(oIn, rows).withColumn("text",
       graft.etl.Sanitize.redactPii(col("text")))
     val scored = scrubbed

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Similarity}
+import graft.functions.GraftFunctions.{rollingHash, splitmix64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1177,9 +1178,7 @@ object ScaleRehearsal {
       }
       // q206: jackknife — one scan into a 32-row bucket aggregate
       if (wanted("q206")) {
-        graft.functions.GraftFunctions.register(spark)
-        val bucket = pmod(call_function("splitmix64",
-            call_function("rolling_hash", col("text")))
+        val bucket = pmod(splitmix64(rollingHash(col("text")))
           .bitwiseAND(lit(Long.MaxValue)), lit(32L))
         val (nJk, tJk) = timed {
           val n = graft.ops.Profiling.jackknifeOf(d.select(
@@ -1240,12 +1239,11 @@ object ScaleRehearsal {
       }
       // q210: forget audit — one corpus projection, 3 keyed rollups
       if (wanted("q210")) {
-        graft.functions.GraftFunctions.register(spark)
         val (nFg, tFg) = timed {
           val assigned = d.select(col("doc_id"),
             pmod(graft.ops.Sampling.idBucket(col("doc_id")), lit(16L))
               .as("shard"),
-            expr(s"pmod(rolling_hash(text), ${graft.ops.Sampling.Prime}L)")
+            pmod(rollingHash(col("text")), lit(graft.ops.Sampling.Prime))
               .as("h"),
             (pmod(col("doc_id"), lit(97L)) === 0L).as("forget"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1405,7 +1403,6 @@ object ScaleRehearsal {
       // the trainer's own tokenization, token counts monotone vs the
       // round-16 snapshot, and lossless concat — violations must be 0
       if (wanted("q255big")) {
-        graft.functions.GraftFunctions.register(spark)
         var rules = 0L
         val (t, tTr) = timed {
           val r = graft.ops.BpeIterative.trainIterative(d, 1024,
@@ -1445,7 +1442,6 @@ object ScaleRehearsal {
       // native encode == trainer tokenization, monotone vs the
       // round-16 snapshot, lossless concat — violations must be 0.
       if (wanted("q256big")) {
-        graft.functions.GraftFunctions.register(spark)
         val base = d.select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 1 && !col("w").contains("\u001F"))
           .distinct().collect().map(_.getString(0)).sorted
@@ -1627,7 +1623,6 @@ object ScaleRehearsal {
       // cost is what the fold chain scales badly in; the production
       // queries are additionally vocab-bounded by the encode join)
       if (wanted("q241enc")) {
-        graft.functions.GraftFunctions.register(spark)
         val B = graft.ops.BpeIterative
         val t = B.trainIterative(d, 64)
         val rules = t.merges.map { case (a, b, _) => (a, b) }

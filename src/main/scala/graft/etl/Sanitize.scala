@@ -17,10 +17,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Sanitize {
 
-  /** Parse a JSON string column against a schema; malformed input
-    * becomes NULL (PERMISSIVE), never a task failure. */
-  def parseJson(c: Column, schema: DataType): Column = from_json(c, schema)
-
   /** Canonicalize a JSON string column: parse then re-serialize so key
     * order/whitespace are engine-normalized (SURVEY.md §7 risk 4 —
     * never compare raw JSONB strings). */
@@ -30,15 +26,6 @@ object Sanitize {
   /** Numeric coercion: cast that yields NULL on garbage (ANSI off for
     * this expression via try_cast semantics). */
   def toLongOrNull(c: Column): Column = c.try_cast("long")
-  def toDoubleOrNull(c: Column): Column = c.try_cast("double")
-
-  /** Null policy: fill defaults for the given columns. */
-  def fillNulls(df: DataFrame, defaults: Map[String, Any]): DataFrame =
-    df.na.fill(defaults)
-
-  /** Null policy: drop rows missing any of the required columns. */
-  def requireColumns(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.drop("any", cols)
 
   /** PII redaction patterns — deliberately simple RE2-compatible
     * regexes (no backreferences, no lookaround) so the same patterns

@@ -2,35 +2,19 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: makes graft's custom codegen
-  * expressions available cluster-wide via
+/** SparkSessionExtensions entry point: makes every SQL name in
+  * [[GraftFunctions.sqlFunctions]] available cluster-wide via
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (the idiomatic deployment path; `GraftFunctions.register` remains
-  * the per-session programmatic form).
+  * (`GraftFunctions.register` is the per-session form).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-    ext.injectFunction((FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "rolling_hash(str) - 64-bit FNV polynomial hash"),
-      (exprs: Seq[Expression]) => RollingHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("minhash64"),
-      info("minhash64", "minhash64(arr) - 64-element MinHash signature"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs.head, 64)))
-    ext.injectFunction((FunctionIdentifier("shingle8"),
-      info("shingle8", "shingle8(str) - distinct hashed 8-byte shingles"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head, 8)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(str) - 64-bit SimHash over space tokens"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("dotf"),
-      info("dotf", "dotf(arr, arr) - double-precision array dot product"),
-      (exprs: Seq[Expression]) => DotProductF(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("l2mu"),
-      info("l2mu", "l2mu(arr, arr) - exact integer squared-L2 distance"),
-      (exprs: Seq[Expression]) => L2MuSq(exprs.head, exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, "", "", "", "", "", "", "",
+          "built-in"),
+        builder))
+    }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -21,7 +20,7 @@ case class RollingHash64(child: Expression) extends UnaryExpression {
 
   // input must be a string column (AbstractDataType/ExpectsInputTypes
   // are private[sql] in Spark 4, so no declarative check here; the
-  // GraftFunctions registry wrapper is the intended entry point)
+  // GraftFunctions builders are the intended entry point)
   override def dataType: DataType = LongType
   override def prettyName: String = "rolling_hash"
 
@@ -53,100 +52,4 @@ case class RollingHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Session registration for graft's custom expressions; idempotent. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash64(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash64", exprs => MinHashSignature(exprs.head, 64), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle8", exprs => ShingleHashes(exprs.head, 8), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle8_seq",
-      exprs => ShingleHashes(exprs.head, 8, distinct = false), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow8_8", exprs => WinnowFingerprints(exprs.head, 8, 8), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "feature_buckets",
-      exprs => FeatureBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack8", exprs => PackedShingles(exprs.head, 8), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack8_seq",
-      exprs => PackedShingles(exprs.head, 8, distinct = false), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack8_s4",
-      exprs => PackedShingles(exprs.head, 8, stride = 4, distinct = false),
-      "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64_fnv", exprs => SimHash64(exprs.head, fnv = true), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotf", exprs => DotProductF(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "splitmix64", exprs => Splitmix64(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2mu", exprs => L2MuSq(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cell_argmin",
-      exprs => CellArgmin(exprs.head, exprs(1), exprs(2)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "varint_delta_pack",
-      exprs => VarintDeltaPack(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_varint_intersect_count",
-      exprs => SortedVarintIntersectCount(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs => BpeEncode(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "scale_round",
-      exprs => ScaleRound(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].longValue()), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_grams",
-      exprs => WordGrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Boolean]), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_grams_arr",
-      exprs => WordGramsArr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Boolean]), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "eq_count", exprs => EqCount(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_count",
-      exprs => HammingCount(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_in_set_count",
-      exprs => TokenInSetCount(exprs.head, exprs(1)), "internal")
-  }
-
-  /** Plain-Scala splitmix64 reference for differential testing. */
-  def splitmix64Reference(h0: Long): Long = {
-    var h = h0
-    h = (h ^ (h >>> 30)) * java.lang.Long.parseUnsignedLong("bf58476d1ce4e5b9", 16)
-    h = (h ^ (h >>> 27)) * java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
-    h ^ (h >>> 31)
-  }
-
-  /** Plain-Scala reference implementation for differential testing. */
-  def rollingHash64Reference(s: String): Long = {
-    val bytes = s.getBytes("UTF-8")
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L
-      i += 1
-    }
-    h
-  }
 }

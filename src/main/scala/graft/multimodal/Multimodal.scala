@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.Tables
+import graft.functions.GraftFunctions.hammingCount
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -257,7 +258,6 @@ object Multimodal {
     * consumers (both sides of the candidate self-join + the verify
     * join) — the q65/q146 single-generator rule. */
   def phashDedupBands(bandsIn: DataFrame, maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(bandsIn.sparkSession)
     val bands = graft.ops.Dedup.register(bandsIn
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val ex = bands.select(col("doc_id"),
@@ -282,7 +282,7 @@ object Multimodal {
       .join(bands.select(col("doc_id").as("doc_b"), col("bands").as("bb")),
         Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        expr("hamming_count(ba, bb)").as("hamming"))
+        hammingCount(col("ba"), col("bb")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a"), col("doc_b"), col("hamming"))
   }
@@ -540,7 +540,6 @@ object Multimodal {
     * (the q126 rule). */
   def phashIncrementalBands(corpusBands: DataFrame,
       batchBands: DataFrame, maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(corpusBands.sparkSession)
     val cb = graft.ops.Dedup.register(corpusBands
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bb = graft.ops.Dedup.register(batchBands
@@ -554,7 +553,6 @@ object Multimodal {
     * query-lifetime registry. */
   private[graft] def phashVerdicts(cb: DataFrame, bb: DataFrame,
       maxHamming: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(cb.sparkSession)
     def exploded(bands: DataFrame) = bands.select(col("doc_id"),
       posexplode(col("bands")).as(Seq("band_idx", "band_val")))
     val exC = exploded(cb)
@@ -571,7 +569,7 @@ object Multimodal {
     // aggregate/zip_with lambda pair ran interpreted per pHash
     // candidate (r16 census rule); same value incl. null/length
     // edges (NativeCountsSpec)
-    val ham = expr("hamming_count(ba, bb)")
+    val ham = hammingCount(col("ba"), col("bb"))
     def verified(cand: DataFrame, left: DataFrame, right: DataFrame) =
       cand
         .join(left.select(col("doc_id").as("doc_id"), col("bands").as("ba")),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.bpeEncode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,10 +42,6 @@ object BpeIterative {
     docs.select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 1 && !col("w").contains("\u001F"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-
-  /** (w, freq, toks) — initial tokenization = single chars. */
-  private[graft] def vocabOf(docs: DataFrame): DataFrame =
-    withCharToks(vocabCountsOf(docs))
 
   private[graft] def withCharToks(counts: DataFrame): DataFrame =
     counts.withColumn("toks",
@@ -459,11 +456,10 @@ object BpeIterative {
     * codegen'd graft.functions.BpeEncode call instead of nMerges
     * stacked interpreted `aggregate` lambdas — bit-identical to
     * [[encodeUnderMergesFold]] (differential spec) and O(rules) per
-    * word only for rules whose fused token occurs in it. The caller
-    * must have GraftFunctions registered. */
+    * word only for rules whose fused token occurs in it. */
   private[graft] def encodeUnderMerges(w: Column,
       merges: Seq[(String, String)]): Column =
-    call_function("bpe_encode", w,
+    bpeEncode(w,
       lit(merges.map { case (a, b) => a + "\u001F" + b }.toArray))
 
   /** The kernel [[encodeUnderMerges]] (bpe_encode) dispatches for
@@ -547,7 +543,6 @@ object BpeIterative {
 
   private def encodeBatchWords(batch: DataFrame,
       rules: Seq[(String, String)], priorVocab: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     vocabCountsOf(batch).select(col("w"))
       .withColumn("toks", encodeUnderMerges(col("w"), rules))
       .join(priorVocab, Seq("w"), "left")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions.wordGrams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -149,7 +150,6 @@ object Decontaminate {
 
   /** Frame-based core of [[splitLeakage]] (needs doc_id, text). */
   def splitLeakageOn(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val (_, split) = Sampling.groupSplit(col("text"))
     val withSplit = docs.select(col("doc_id"), col("text"),
       split.as("split"))
@@ -282,11 +282,10 @@ object Decontaminate {
     // one native pass (graft.functions.WordGrams) — bit-identical
     // gram strings to the interpreted transform/concat_ws lambda it
     // replaced (WordGramsSpec; the Ranking.trigramFrame swap)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("source"),
-        posexplode(call_function("word_grams", col("text"), lit(n),
-          lit(false))).as(Seq("p0", "gram")))
+        posexplode(wordGrams(col("text"), n, minOne = false))
+          .as(Seq("p0", "gram")))
       .select(col("doc_id"), col("source"),
         (col("p0") + 1L).cast("long").as("pos"), col("gram"))
   }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{eqCount, minhash64, pack8S4,
+  rollingHash, shingle8, simhash64, simhash64Fnv, sortedIntersectCount,
+  wordGramsArr}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -169,11 +172,10 @@ object Dedup extends SetSimJoins with SetSimIndexing
     // (the round-13 CollapseProject-through-Generate class, measured
     // 2x on q119/q120); toks referenced twice below the Generate
     // keeps the split projection put
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
-        posexplode(call_function("word_grams_arr", col("toks"), lit(w),
-          lit(true))).as(Seq("s", "wtext")))
+        posexplode(wordGramsArr(col("toks"), w, minOne = true))
+          .as(Seq("s", "wtext")))
   }
 
   def substringDedup(docs: DataFrame, w: Int = 8): DataFrame = {
@@ -288,16 +290,14 @@ object Dedup extends SetSimJoins with SetSimIndexing
   /** Distinct 8-byte shingle hashes per document (native codegen
     * expression — see graft.functions.ShingleHashes). */
   def shingles(df: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.withColumn("sh", expr(s"shingle8($textCol)"))
+    df.withColumn("sh", shingle8(col(textCol)))
   }
 
   /** 64-element MinHash signature via the native codegen expression
     * (graft.functions.MinHashSignature) — one JIT'd pass per row
     * instead of 64 interpreted transform() lambdas. */
   def minHashSignatures(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    shingles(df).withColumn("sig", expr("minhash64(sh)"))
+    shingles(df).withColumn("sig", minhash64(col("sh")))
   }
 
   /** (id, band_id, band_hash) rows for a signature table — THE banding
@@ -329,7 +329,7 @@ object Dedup extends SetSimJoins with SetSimIndexing
       // candidate (r16 census rule); same count incl. null/length
       // edges (NativeCountsSpec)
       .withColumn("est_j",
-        call_function("eq_count", col("sig_a"), col("sig_b"))
+        eqCount(col("sig_a"), col("sig_b"))
           .cast("double") / NumHashes)
       .filter(col("est_j") >= minJaccard - 0.2)
       .select(aCol, bCol)
@@ -427,12 +427,11 @@ object Dedup extends SetSimJoins with SetSimIndexing
   def exactVerify(pairs: DataFrame, docsA: DataFrame, idA: String, aCol: String,
       docsB: DataFrame, idB: String, bCol: String, minJaccard: Double,
       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(pairs.sparkSession)
     pairs
       .join(docsA.select(col(idA).as(aCol), col(textCol).as("__text_a")), aCol)
       .join(docsB.select(col(idB).as(bCol), col(textCol).as("__text_b")), bCol)
-      .withColumn("sh_a", expr("shingle8(__text_a)"))
-      .withColumn("sh_b", expr("shingle8(__text_b)"))
+      .withColumn("sh_a", shingle8(col("__text_a")))
+      .withColumn("sh_b", shingle8(col("__text_b")))
       .withColumn("jaccard", round(
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
@@ -499,14 +498,13 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * caller bounds the slice). */
   def minhashAccuracyOn(docs: DataFrame, minJPpm: Long = 500000L,
       boundPpm: Long = 250000L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // sort once per doc, intersect with the native two-cursor
     // expression: array_intersect/array_union built per-pair hash
     // sets and ran 95 s on the sf0.1 slice; sorted_intersect_count
     // is the same count at a fraction of the per-pair cost (the
     // setsim verify discipline)
     val sh = register(docs.select(col("doc_id"),
-        sort_array(expr("shingle8(text)")).as("sh"))
+        sort_array(shingle8(col("text"))).as("sh"))
       .persist(StorageLevel.MEMORY_AND_DISK))
     val sigs = minHashSignatures(docs).select(col("doc_id"), col("sig"))
     // exact PPJoin PREFIX candidates on the HASH total order instead
@@ -536,8 +534,7 @@ object Dedup extends SetSimJoins with SetSimIndexing
           lit(minJPpm) * size(col("sh_b")).cast("long") &&
         size(col("sh_b")).cast("long") * 1000000L >=
           lit(minJPpm) * size(col("sh_a")).cast("long"))
-      .withColumn("ni", call_function("sorted_intersect_count",
-        col("sh_a"), col("sh_b")))
+      .withColumn("ni", sortedIntersectCount(col("sh_a"), col("sh_b")))
       .withColumn("nu",
         size(col("sh_a")).cast("long") + size(col("sh_b")).cast("long")
           - col("ni"))
@@ -547,8 +544,9 @@ object Dedup extends SetSimJoins with SetSimIndexing
         Seq("doc_a"))
       .join(broadcast(sigs.select(col("doc_id").as("doc_b"),
         col("sig").as("sig_b"))), Seq("doc_b"))
-      .withColumn("est_ppm", expr(
-        s"eq_count(sig_a, sig_b) * 1000000L div ${NumHashes}L"))
+      .withColumn("est_ppm", call_function("div",
+        eqCount(col("sig_a"), col("sig_b")) * 1000000L,
+        lit(NumHashes.toLong)))
       .select(col("doc_a"), col("doc_b"), col("jaccard_ppm"),
         (abs(col("est_ppm") - col("jaccard_ppm")) <= boundPpm)
           .as("est_within"))
@@ -676,25 +674,12 @@ object Dedup extends SetSimJoins with SetSimIndexing
   /** 64-bit SimHash over whitespace tokens via the native codegen
     * expression (graft.functions.SimHash64): one JIT'd byte-walk per
     * row instead of nested interpreted aggregate/zip_with lambdas. */
-  def simhashExpr(textCol: String): Column = expr(s"simhash64($textCol)")
+  def simhashExpr(textCol: String): Column = simhash64(col(textCol))
 
   /** The interpreted higher-order-function form of the same SimHash —
-    * kept as the differential-test reference for SimHash64 (the inner
-    * zip_with lambda references the outer aggregate lambda's variable,
-    * which is why it must be written as a SQL expression). */
-  def simhashExprInterpreted(textCol: String): Column = {
-    val counts =
-      s"""aggregate(
-         |  transform(split($textCol, ' '), t -> xxhash64(t)),
-         |  array_repeat(0L, 64),
-         |  (acc, h) -> zip_with(acc, sequence(0, 63),
-         |    (a, i) -> a + CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END))""".stripMargin
-    expr(
-      s"""aggregate(
-         |  zip_with($counts, sequence(0, 63),
-         |    (c, i) -> CASE WHEN c >= 0 THEN shiftleft(1L, i) ELSE 0L END),
-         |  0L, (acc, b) -> acc | b)""".stripMargin)
-  }
+    * kept as the differential-test reference for SimHash64. */
+  def simhashExprInterpreted(textCol: String): Column =
+    simhashHof(textCol, xxhash64(_))
 
   /** Deterministic SimHash: identical semantics to [[simhashExpr]] but
     * with the FNV+splitmix token hash (`rolling_hash`) in place of
@@ -702,18 +687,24 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * replay. This sibling turns the SimHash *capability* into a full
     * hash-checked oracle row (q83), the q71-for-q46 move; the xxhash64
     * form stays the production default (built-in, codegen'd). */
-  def simhashDetExpr(textCol: String): Column = {
-    val counts =
-      s"""aggregate(
-         |  transform(split($textCol, ' '), t -> rolling_hash(t)),
-         |  array_repeat(0L, 64),
-         |  (acc, h) -> zip_with(acc, sequence(0, 63),
-         |    (a, i) -> a + CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END))""".stripMargin
-    expr(
-      s"""aggregate(
-         |  zip_with($counts, sequence(0, 63),
-         |    (c, i) -> CASE WHEN c >= 0 THEN shiftleft(1L, i) ELSE 0L END),
-         |  0L, (acc, b) -> acc | b)""".stripMargin)
+  def simhashDetExpr(textCol: String): Column =
+    simhashHof(textCol, rollingHash)
+
+  /** SimHash as interpreted HOF lambdas over `tokenHash` of each space
+    * token: per bit position, +1/-1 votes summed over tokens, then the
+    * bits whose sum is >= 0. The inner zip_with lambda reads the outer
+    * aggregate lambda's token hash `h`. */
+  private def simhashHof(textCol: String, tokenHash: Column => Column): Column = {
+    val bits = sequence(lit(0), lit(63))
+    val counts = aggregate(transform(split(col(textCol), " "), tokenHash),
+      array_repeat(lit(0L), 64),
+      (acc, h) => zip_with(acc, bits, (a, i) =>
+        a + when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1,
+          lit(1)).otherwise(lit(-1))))
+    aggregate(
+      zip_with(counts, bits, (c, i) =>
+        when(c >= 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
+      lit(0L), (acc, b) => acc.bitwiseOR(b))
   }
 
   /** Query entry: deterministic SimHash + 16-bit band split per doc.
@@ -721,9 +712,8 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * interpreted [[simhashDetExpr]] is its differential reference,
     * exactly the xxhash64 pair's arrangement. */
   def simhashDetFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val withSim = Tables.documents(spark, dir)
-      .select(col("doc_id"), expr("simhash64_fnv(text)").as("simhash_det"))
+      .select(col("doc_id"), simhash64Fnv(col("text")).as("simhash_det"))
     (0 until 4).foldLeft(withSim) { (df, c) =>
       df.withColumn(s"band_$c",
         shiftrightunsigned(col("simhash_det"), c * 16).bitwiseAND(lit(0xFFFFL)))
@@ -733,7 +723,6 @@ object Dedup extends SetSimJoins with SetSimIndexing
 
   /** Per-document simhash + its 4×16-bit bands (the hamming-LSH keys). */
   def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val withSim = Tables.documents(spark, dir)
       .select(col("doc_id"), simhashExpr("text").as("simhash"))
     (0 until 4).foldLeft(withSim) { (df, c) =>
@@ -755,9 +744,8 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * that, lift the two sums to decimal(38,0) (same ppm discipline as
     * joinSkewReport). */
   def simhashBandMoments(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val withSim = Tables.documents(spark, dir)
-      .select(col("doc_id"), expr("simhash64_fnv(text)").as("sim"))
+      .select(col("doc_id"), simhash64Fnv(col("text")).as("sim"))
     withSim.select(posexplode(array((0 until 4).map(c =>
         shiftrightunsigned(col("sim"), c * 16).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("bp", "band_val")))
@@ -776,7 +764,6 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * pair within hamming distance 3 shares at least one of 4 bands),
     * verified by exact popcount. Bucket-join only — no all-pairs. */
   def simhashNearDups(df: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // materialize (id, simhash) before the band self-join — otherwise
     // both join branches re-tokenize + re-hash the corpus
     val sims = register(df.select(col(idCol), simhashExpr("text").as("simhash"))
@@ -818,11 +805,10 @@ object Dedup extends SetSimJoins with SetSimIndexing
     // string's for NUL-free Latin-1 text, and no hash crosses engines
     // (a pack is invertible; the q63 rule is satisfied the same way
     // the q126 g64 pipeline satisfies it)
-    graft.functions.GraftFunctions.register(spark)
     val sh = graft.Tables.documents(spark, dir)
       .filter(length(col("text")) >= 8)
       .select(col("source"),
-        explode(call_function("pack8_s4", col("text"))).as("g"))
+        explode(pack8S4(col("text"))).as("g"))
       .distinct()
     val a = sh.select(col("g"), col("source").as("source_a"))
     val b = sh.select(col("g"), col("source").as("source_b"))

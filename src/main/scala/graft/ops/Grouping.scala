@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{rollingHash, splitmix64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,12 +85,11 @@ object Grouping {
 
   def kmvSketchRollup(spark: SparkSession, dir: String,
       k: Int = KmvK): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // splitmix64 finalizer for uniformity (raw FNV of short strings
     // clusters in the high bits and biases order statistics); sign bit
     // dropped so MIN agrees with the oracle's unsigned order
     def h(j: Int): Column =
-      call_function("splitmix64", call_function("rolling_hash",
+      splitmix64(rollingHash(
         concat(col("user_id").cast("string"), lit(s"#$j"))))
         .bitwiseAND(lit(Long.MaxValue))
     val ev = Tables.events(spark, dir)

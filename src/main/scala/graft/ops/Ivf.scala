@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{cellArgmin, l2mu, scaleRound}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -136,7 +137,6 @@ object Ivf {
     * probe the nProbe nearest, exact cosine re-rank inside them. */
   def search(index: Index, queryVec: Array[Float], topK: Int,
       nProbe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(index.assigned.sparkSession)
     val q = queryVec.map(_.toDouble)
     def dist2(c: Array[Double]): Double =
       c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum
@@ -183,8 +183,8 @@ object Ivf {
   private def muCol: Column =
     // one native pass (graft.functions.ScaleRound) — bit-identical to
     // the interpreted transform/round lambda it replaces
-    // (ScaleRoundSpec); every consumer registers GraftFunctions first
-    call_function("scale_round", col("embedding"), lit(1000000L))
+    // (ScaleRoundSpec)
+    scaleRound(col("embedding"), 1000000L)
 
   /** The (d2, cell) argmin of `x` over a fixed centroid set as ONE
     * native codegen expression (graft.functions.CellArgmin): the
@@ -201,14 +201,13 @@ object Ivf {
     *    exists here, and no exchange at all. */
   private[graft] def argminStruct(x: Column,
       cents: Seq[(Long, Array[Long])]): Column =
-    call_function("cell_argmin", x,
+    cellArgmin(x,
       typedLit(cents.map(_._2.toSeq)), typedLit(cents.map(_._1)))
 
   /** Attach the argmin `cell` column to a frame carrying a unique
     * `vec_id` and the micro-unit `x` array. */
   private def withCellCol(df: DataFrame,
       cents: Seq[(Long, Array[Long])]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("cell", argminStruct(col("x"), cents).getField("cell"))
   }
 
@@ -303,7 +302,6 @@ object Ivf {
     * oracle checks BOTH the routing and the ranking. */
   def deterministicSearch(spark: SparkSession, dir: String,
       queryId: Long = 7, nProbe: Int = 2, topK: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     deterministicSearchOn(deterministicIndex(spark, dir),
       Tables.embeddings(spark, dir), queryId, nProbe, topK)
   }
@@ -313,7 +311,6 @@ object Ivf {
     * frame). */
   def deterministicSearchOn(idx: DetIndex, emb: DataFrame,
       queryId: Long, nProbe: Int = 2, topK: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val qEmb = emb
       .filter(col("vec_id") === queryId).select(col("embedding"))
       .head().getSeq[Float](0)
@@ -521,7 +518,6 @@ object Ivf {
     * embeddings) — the planted-fixture / rehearsal entry point. */
   def cellMedoidsOn(idx: DetIndex, emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val centDf = idx.centroids.map { case (id, c) => (id, c.toSeq) }
       .toDF("cell", "cent")
@@ -529,7 +525,7 @@ object Ivf {
       .join(emb, Seq("vec_id"))
       .select(col("vec_id"), col("cell"), muCol.as("xmu"))
       .join(broadcast(centDf), Seq("cell"))
-      .withColumn("d2", call_function("l2mu", col("xmu"), col("cent")))
+      .withColumn("d2", l2mu(col("xmu"), col("cent")))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"),
         min(struct(col("d2"), col("vec_id"))).as("m"))
@@ -584,7 +580,6 @@ object Ivf {
     * embeddings) — the planted-fixture / rehearsal entry point. */
   def cellOutliersOn(idx: DetIndex, emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val centDf = idx.centroids.map { case (id, c) => (id, c.toSeq) }
       .toDF("cell", "cent")
@@ -594,7 +589,7 @@ object Ivf {
       .join(emb, Seq("vec_id"))
       .select(col("vec_id"), col("cell"), muCol.as("xmu"))
       .join(broadcast(centDf), Seq("cell"))
-      .withColumn("d2_mu", call_function("l2mu", col("xmu"), col("cent")))
+      .withColumn("d2_mu", l2mu(col("xmu"), col("cent")))
       .withColumn("n_vecs", count(lit(1)).over(w))
       .withColumn("rnk", row_number().over(
         w.orderBy(col("d2_mu").desc, col("vec_id"))))
@@ -736,7 +731,6 @@ object Ivf {
     * assignment — nothing refits, nothing is all-pairs. */
   def semanticDedupIncremental(spark: SparkSession, dir: String,
       batch: DataFrame, tauPpm: Long = 400000L): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = deterministicIndex(spark, dir)
     // the routed batch feeds FOUR plan branches (vsPrior, both sides
     // of vsBatch, final verdicts); unpersisted, each re-evaluates the
@@ -857,7 +851,6 @@ object Ivf {
 
   def semanticDedupOn(assigned: DataFrame, tauPpm: Long,
       maxCell: Int = MaxCell): DataFrame = {
-    graft.functions.GraftFunctions.register(assigned.sparkSession)
     val dropped = semanticCandidates(assigned, maxCell)
       .withColumn("cppm",
         round(round(Similarity.cosine(col("a_emb"), col("b_emb")), 6)
@@ -999,7 +992,6 @@ object Ivf {
     * set, not per query). */
   def annRecallAudit(spark: SparkSession, dir: String, queryId: Long = 7,
       nProbe: Int = 2, topK: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     annRecallAuditOn(deterministicIndex(spark, dir),
       Tables.embeddings(spark, dir), queryId, nProbe, topK)
   }
@@ -1178,7 +1170,6 @@ object Ivf {
     * expressions referenced twice stay in their own projection). */
   private def pqAssign(subs: DataFrame,
       cents: Map[Int, Seq[(Long, Array[Long])]]): DataFrame = {
-    graft.functions.GraftFunctions.register(subs.sparkSession)
     val ms = cents.keys.toSeq.sorted
     val dispatch = ms.tail.foldLeft(
         when(col("m") === ms.head.toLong,
@@ -1306,7 +1297,7 @@ object Ivf {
     val qCol = array(q.map(lit): _*)
     val exact = xi.filter(col("vec_id") =!= queryId)
       .select(col("vec_id"),
-        call_function("l2mu", col("x"), qCol).as("ed2"))
+        l2mu(col("x"), qCol).as("ed2"))
       .orderBy(col("ed2"), col("vec_id")).limit(topK)
       .select(col("vec_id"), lit(true).as("hit"))
     adcTop.join(exact, Seq("vec_id"), "left")

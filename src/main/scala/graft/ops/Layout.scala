@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{rollingHash, shingle8Seq}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,12 +99,11 @@ object Layout {
     * files, so the spec's round-trip equality is a real end-to-end
     * integrity check, not a replay of the same lineage. */
   def shardManifest(docs: DataFrame, nShards: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(
         pmod(Sampling.idBucket(col("doc_id")), lit(nShards.toLong))
           .as("shard"),
         length(col("text")).cast("long").as("len"),
-        expr(s"pmod(rolling_hash(text), ${Sampling.Prime}L)").as("h"))
+        pmod(rollingHash(col("text")), lit(Sampling.Prime)).as("h"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"),
         sum(col("h")).as("content_digest"))
@@ -135,12 +135,11 @@ object Layout {
     * |shards|-sized. */
   def forgetAudit(spark: SparkSession, dir: String,
       nShards: Int = 16, forgetMod: Int = 97): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val assigned = Dedup.register(Tables.documents(spark, dir)
       .select(col("doc_id"),
         pmod(Sampling.idBucket(col("doc_id")), lit(nShards.toLong))
           .as("shard"),
-        expr(s"pmod(rolling_hash(text), ${Sampling.Prime}L)").as("h"),
+        pmod(rollingHash(col("text")), lit(Sampling.Prime)).as("h"),
         (pmod(col("doc_id"), lit(forgetMod.toLong)) === 0L)
           .as("forget"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -479,19 +478,16 @@ object Layout {
     * find cuts — audit cadence, like q174), one (source, digest)
     * map-side-combined aggregate, a |sources|-row rollup. */
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     cdcChunksDocs(Tables.documents(spark, dir))
   }
 
   /** Frame-based core of [[cdcChunks]] (needs source + text). */
   def cdcChunksDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // cuts computed ONCE into their own projection (shingle8_seq is
     // the per-byte cost; referencing it twice would double it)
-    val cuts = expr(
-      """filter(transform(shingle8_seq(text),
-        |  (h, i) -> CASE WHEN i > 0 AND pmod(h, 64L) = 0L
-        |            THEN i + 1 END), x -> x IS NOT NULL)""".stripMargin)
+    val cuts = filter(transform(shingle8Seq(col("text")),
+      (h, i) => when(i > 0 && pmod(h, lit(64L)) === 0L, i + 1)),
+      x => x.isNotNull)
     val chunks = expr(
       """zip_with(concat(array(1), cuts),
         |  concat(cuts, array(length(text) + 1)),
@@ -648,7 +644,6 @@ object Layout {
   def exportTrainingShards(docs: DataFrame, outDir: String,
       nShards: Int): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     docs.withColumn("shard",
         pmod(Sampling.idBucket(col("doc_id")), lit(nShards.toLong)))
       .repartition(col("shard"))
@@ -657,7 +652,7 @@ object Layout {
       .groupBy(col("shard").cast("long").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text")).cast("long")).as("sum_len"),
-        sum(expr(s"pmod(rolling_hash(text), ${Sampling.Prime}L)"))
+        sum(pmod(rollingHash(col("text")), lit(Sampling.Prime)))
           .as("content_digest"))
       .orderBy(col("shard"))
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{rollingHash, splitmix64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -867,7 +868,6 @@ object Profiling {
   /** Frame-based core of [[spearman]] (needs doc_id, source, text). */
   def spearmanDocs(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val stop = TextAnalysis.stopCount(col("text")).cast("long")
     val vals = docs.select(col("doc_id"), col("source"),
       length(col("text")).cast("long").as("x"), stop.as("y"))
@@ -1013,9 +1013,8 @@ object Profiling {
     * after is |buckets|-sized. */
   def jackknifeLength(spark: SparkSession, dir: String,
       buckets: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val bucket = pmod(
-      call_function("splitmix64", call_function("rolling_hash", col("text")))
+      splitmix64(rollingHash(col("text")))
         .bitwiseAND(lit(Long.MaxValue)), lit(buckets.toLong))
     jackknifeOf(Tables.documents(spark, dir)
       .select(bucket.as("bucket"), length(col("text")).cast("long").as("x")))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.wordGrams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,9 +137,8 @@ object Ranking {
     // it replaces (WordGramsSpec: a space-joined n-gram IS a
     // substring of the text), which ran interpreted per position on
     // the hottest scan of the trigram-LM family (r16 census rule)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), explode(
-      call_function("word_grams", col("text"), lit(3), lit(false)))
+      wordGrams(col("text"), 3, minOne = false))
       .as("ngram"))
   }
 
@@ -313,7 +313,6 @@ object Ranking {
   def rrfFusionOn(docs: DataFrame, emb: DataFrame, queryId: Long = 7,
       rrfK: Int = 60, topK: Int = 20, candidateC: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val a = bm25Docs(docs)
       .orderBy(col("bm25").desc, col("doc_id")).limit(candidateC)
       .select(col("doc_id"), row_number().over(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{featureBuckets, rollingHash, splitmix64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,7 +79,7 @@ object Sampling {
     * any subset (a retry can never flip an assignment). */
   def groupSplit(groupKey: Column, trainPct: Int = 80, valPct: Int = 10): (Column, Column) = {
     val bucket = pmod(
-      call_function("splitmix64", call_function("rolling_hash", groupKey))
+      splitmix64(rollingHash(groupKey))
         .bitwiseAND(lit(Long.MaxValue)), lit(100L))
     val split = when(bucket < trainPct, lit("train"))
       .when(bucket < trainPct + valPct, lit("val"))
@@ -88,7 +89,6 @@ object Sampling {
 
   /** Query entry (q89): content-group split of documents. */
   def groupSplitDocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (bucket, split) = groupSplit(col("text"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), bucket.as("grp_bucket"), split.as("split"))
@@ -121,7 +121,6 @@ object Sampling {
   def clusterSplit(spark: SparkSession, dir: String,
       trainPct: Int = 80, valPct: Int = 10,
       minCos: Double = 0.35): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     clusterSplitOn(
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") < 200L).select(col("vec_id")),
@@ -137,12 +136,11 @@ object Sampling {
     * point). */
   def clusterSplitOn(allVecs: DataFrame, edges: DataFrame,
       trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(allVecs.sparkSession)
     val clusters = Dedup.dedupClusters(edges, "vec_a", "vec_b")
       .select(col("node").as("vec_id"), col("cluster_id"))
     val allv = allVecs
     val bucket = pmod(
-      call_function("splitmix64", col("cluster_id"))
+      splitmix64(col("cluster_id"))
         .bitwiseAND(lit(Long.MaxValue)), lit(100L))
     val split = when(bucket < trainPct, lit("train"))
       .when(bucket < trainPct + valPct, lit("val"))
@@ -181,7 +179,6 @@ object Sampling {
     * text). */
   def budgetSelectDocs(docs: DataFrame,
       budgetTokens: Long = 20000L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val t = col("text")
     val nTok = size(split(t, " ")).cast("long")
     val punct = expr(
@@ -650,7 +647,6 @@ object Sampling {
       buckets: Int = 1024, topPermille: Int = 100,
       binWalkMinDocs: Long = 100000000L): DataFrame = {
     require((buckets & (buckets - 1)) == 0, "buckets must be a power of two")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // split once into its own projection (CollapseProject keeps it —
     // non-cheap, referenced thrice), hash unigram + bigram features,
     // bucket to low bits. The exploded bucket table feeds THREE
@@ -666,8 +662,7 @@ object Sampling {
     // Bit-identical values AND order (FeatureBucketsSpec).
     val feats = Dedup.register(docs
       .select(col("doc_id"), col("source"),
-        explode(call_function("feature_buckets", col("text"),
-          lit(buckets))).as("b"))
+        explode(featureBuckets(col("text"), buckets)).as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val target = feats.filter(col("source") === "src0")
     val raw = feats.filter(col("source") =!= "src0")

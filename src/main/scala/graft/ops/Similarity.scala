@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{dotf, scaleRound}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -20,12 +21,10 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** dot(a, b) in double precision via the native codegen expression
-    * (graft.functions.DotProductF, registered as `dotf`): one JIT'd
-    * loop instead of interpreted zip_with/aggregate lambdas —
-    * bit-identical results (same cast + summation order). Callers'
-    * sessions must have GraftFunctions registered; every public entry
-    * point in this object and Ivf does so. */
-  def dot(a: Column, b: Column): Column = call_function("dotf", a, b)
+    * (graft.functions.DotProductF): one JIT'd loop instead of
+    * interpreted zip_with/aggregate lambdas — bit-identical results
+    * (same cast + summation order). */
+  def dot(a: Column, b: Column): Column = dotf(a, b)
 
   /** The interpreted higher-order-function form — kept as the
     * differential-test reference for DotProductF. */
@@ -40,7 +39,6 @@ object Similarity {
     * Rounded to 6dp so the (order-stable but engine-specific) float
     * fold can't flip the ranking vs the oracle. */
   def cosineTopK(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"))
@@ -100,7 +98,6 @@ object Similarity {
     * pair sums. No window, no collect, nothing corpus-sized past the
     * first aggregate. */
   def planePlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     planePlanOn(Tables.embeddings(spark, dir))
   }
 
@@ -109,7 +106,6 @@ object Similarity {
 
   /** Frame-based core of [[planePlan]]. */
   def planePlanOn(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     def d(c: Column) = c.cast("decimal(38,0)")
     val planes = hyperplanes(PlanePlanMax, 64)
     val hist = graft.ops.Dedup.register(emb
@@ -197,7 +193,6 @@ object Similarity {
 
   /** Per-vector LSH bucket assignment (the ANN index build). */
   def annBuckets(spark: SparkSession, dir: String, numPlanes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val planes = hyperplanes(numPlanes, 64)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
@@ -209,7 +204,6 @@ object Similarity {
     * inside it. Recall vs brute force is measured in SimilaritySpec. */
   def annSearch(emb: DataFrame, queryVec: Array[Float], k: Int,
       numPlanes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val planes = hyperplanes(numPlanes, 64)
     val qCol = array(queryVec.map(lit): _*)
     val qBucket = lshBucket(qCol, planes)
@@ -243,7 +237,6 @@ object Similarity {
     * instead of scanning for a bit_count predicate. */
   def annSearchMultiProbe(emb: DataFrame, queryVec: Array[Float], k: Int,
       numPlanes: Int = 8, maxHamming: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     require(numPlanes <= 20, "probe enumeration is 2^numPlanes")
     val planes = hyperplanes(numPlanes, 64)
     val qb = bucketOf(queryVec, planes)
@@ -262,7 +255,6 @@ object Similarity {
   /** Query entry: multi-probe search for vec_id 7's embedding
     * (hamming<=1 probe ring, top-10 by exact cosine re-rank). */
   def annMultiProbeTop10(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
@@ -289,13 +281,12 @@ object Similarity {
     * multiply-add chain, no interpreted lambdas. */
   def sqAnnTopK(spark: SparkSession, dir: String, queryId: Long = 7,
       topK: Int = 10, candidates: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val qEmb = emb.filter(col("vec_id") === queryId)
       .select(col("embedding")).head().getSeq[Float](0)
     val qCodes = qEmb.map(v => Det.halfUpLong(v.toDouble * SqScale)).toArray
     val codes =
-      call_function("scale_round", col("embedding"), lit(SqScale.toLong))
+      scaleRound(col("embedding"), SqScale.toLong)
     val intScore = qCodes.zipWithIndex.map { case (q, i) =>
       element_at(col("__codes"), i + 1) * lit(q)
     }.reduce(_ + _)
@@ -394,7 +385,6 @@ object Similarity {
     * fold can't flip a boundary decision vs the oracle. */
   def embeddingNearDups(spark: SparkSession, dir: String,
       maxId: Long = 200, minCos: Double = 0.2): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).filter(col("vec_id") < maxId)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
@@ -426,7 +416,6 @@ object Similarity {
     * densities, not the full pair set. */
   def pairDensityCurve(spark: SparkSession, dir: String,
       maxId: Long = 200): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).filter(col("vec_id") < maxId)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
@@ -465,7 +454,6 @@ object Similarity {
 
   def lshEmbeddingNearDups(emb: DataFrame, minCos: Double,
       numPlanes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val planes = hyperplanes(numPlanes, 64)
     val bucketed = emb.select(col("vec_id"), col("embedding"),
       lshBucket(col("embedding"), planes).as("bucket"))
@@ -706,7 +694,6 @@ object Similarity {
     * (doc_id, text). Singleton docs (no pair) are absent by design —
     * the report is about realized cluster savings. */
   def keepBestDedupOn(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val qdocs = docs
       .select(col("doc_id").as("vec_id"),
         round(round(TextAnalysis.qualityScore(col("text")), 6)

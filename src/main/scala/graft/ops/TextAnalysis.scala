@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bpeEncode, pack8Seq, rollingHash,
+  shingle8Seq, tokenInSetCount, winnow8_8}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,10 +44,9 @@ object TextAnalysis {
     * tk -> tk IN (markers)))` as the native token_in_set_count kernel
     * (NativeCountsSpec differential; the per-token isin lambda ran
     * interpreted on every quality-gated corpus scan — r16 census
-    * rule). Callers must have GraftFunctions registered, like every
-    * other native-expression site. */
+    * rule). */
   private[graft] def stopCount(t: Column): Column =
-    call_function("token_in_set_count", t,
+    tokenInSetCount(t,
       array(markers.toMap.apply("en").map(lit): _*))
 
   def qualityScore(t: Column): Column = {
@@ -54,8 +54,11 @@ object TextAnalysis {
     val punct = size(regexp_extract_all(t, lit("[^a-z0-9 ]"), lit(0)))
       .cast("double")
     val stop = stopCount(t).cast("double")
+    // try_divide: an empty text scores NULL (dropped by any quality
+    // filter) instead of failing the job with ANSI DIVIDE_BY_ZERO;
+    // DuckDB's division by zero is NULL too
     lit(0.4) * least(nTokens / 100.0, lit(1.0)) +
-      lit(0.3) * (lit(1.0) - punct / length(t).cast("double")) +
+      lit(0.3) * (lit(1.0) - try_divide(punct, length(t).cast("double"))) +
       lit(0.3) * least(stop / nTokens * 5.0, lit(1.0))
   }
 
@@ -74,12 +77,11 @@ object TextAnalysis {
   /** Quality scoring: length, token stats, punctuation + stopword
     * ratios, composite score in [0,1]. */
   def qualityStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val t = col("text")
     val nTokens = size(tokens(t)).cast("long")
     val punct = expr("size(regexp_extract_all(text, '[^a-z0-9 ]', 0))").cast("long")
     val stop = stopCount(t).cast("long")
-    val punctRatio = punct.cast("double") / length(t).cast("double")
+    val punctRatio = try_divide(punct.cast("double"), length(t).cast("double"))
     val stopRatio = stop.cast("double") / nTokens.cast("double")
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
@@ -609,7 +611,6 @@ object TextAnalysis {
   /** Frame-based core of [[qualityLengthBias]] (needs text,
     * n_chars). */
   def qualityLengthBiasDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select((length(bin(col("n_chars"))) - 1).cast("long")
         .as("len_bin"),
@@ -656,7 +657,6 @@ object TextAnalysis {
     * source, text). */
   def sourceQualityRankDocs(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"), col("source"),
       round(round(qualityScore(col("text")), 6) * 1000000d, 0)
         .cast("long").as("q_ppm"))
@@ -1114,9 +1114,8 @@ object TextAnalysis {
     * native == chain equality). */
   private def encodedVocabOf(words: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(words.sparkSession)
     words.select(col("w")).distinct()
-      .withColumn("enc", call_function("bpe_encode", col("w"),
+      .withColumn("enc", bpeEncode(col("w"),
         lit(merges.map { case (a, b) => a + "\u001F" + b }.toArray)))
       .select(col("w"),
         length(col("w")).cast("long").as("n_chars"),
@@ -1469,12 +1468,11 @@ object TextAnalysis {
     * invariants also tested in AnalyticsSpec. */
   def winnowed(df: org.apache.spark.sql.DataFrame,
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // native single-pass expression (monotonic-deque window minima);
     // the composable transform/array_min/slice form is semantically
     // identical but interpreted, and was the measured bottleneck of
     // corpus-scale fingerprinting
-    df.withColumn("fingerprints", expr(s"winnow8_8($textCol)"))
+    df.withColumn("fingerprints", winnow8_8(col(textCol)))
   }
 
   /** Query: winnowing fingerprint summary per document. */
@@ -1493,12 +1491,11 @@ object TextAnalysis {
     * the SQL FNV+splitmix replay (graft.ops.HashSql); the expressions
     * are also verified against Scala references in AnalyticsSpec. */
   def fingerprints(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        expr("rolling_hash(text)").as("fp64"),
-        expr("array_min(shingle8_seq(text))").as("min_shingle"),
-        expr("size(shingle8_seq(text))").cast("long").as("n_shingles"))
+        rollingHash(col("text")).as("fp64"),
+        array_min(shingle8Seq(col("text"))).as("min_shingle"),
+        size(shingle8Seq(col("text"))).cast("long").as("n_shingles"))
       .orderBy(col("doc_id"))
   }
 
@@ -1527,10 +1524,9 @@ object TextAnalysis {
     // pass — the interpreted transform/substring explode was 2.6 s of
     // the 3.4 s sf0.1 wall): type identity is preserved exactly for
     // NUL-free Latin-1 text, so every count below is unchanged
-    GraftFunctions.register(docs.sparkSession)
     val counts = docs
       .select(col("source"),
-        explode(call_function("pack8_seq", col("text"))).as("gram"))
+        explode(pack8Seq(col("text"))).as("gram"))
       .groupBy(col("source"), col("gram"))
       .agg(count(lit(1)).as("k"))
     // persist the tiny (source, k_bucket) frame: a bare DataFrame
@@ -1642,7 +1638,6 @@ object TextAnalysis {
 
   /** Frame-based core of [[filterCascade]] (needs source + text). */
   def filterCascadeDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val t = col("text")
     val toks = tokens(t)
     val nTok = size(toks).cast("long")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.varintDeltaPack
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -92,46 +93,7 @@ trait SetSimIndexing { this: Dedup.type =>
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("g64"))).as("gs"),
         count(lit(1)).as("n"),
-        call_function("varint_delta_pack",
-          sort_array(collect_list(col("gid")))).as("gv"))
-  }
-
-  /** Build + write the set-sim index for a corpus as PLAIN parquet —
-    * the portable form for stores without a metastore (the
-    * bucketed-table form [[persistedSetSimIndex]] builds is the
-    * default). The one-off organized write a deployment amortizes
-    * (the scaladoc promise at [[setSimJoinIncremental]] — "the stable
-    * index-side statistic a deployment precomputes" — made real; the
-    * Ivf.writeIndex twin). Everything written is exact integer state
-    * (packed grams, counts, row_number ranks with a total tie-break),
-    * so an index-riding query is bit-identical to the from-scratch
-    * form. */
-  def writeSetSimIndex(docs: DataFrame, idCol: String,
-      path: String): Unit = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    latin1Guard(docs)
-    val grams = register(packedGrams(docs, idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val freq = grams.groupBy(col("g64")).agg(count(lit(1)).as("df"))
-    val gramSets = register(packedGramSetsOf(grams, freq)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val sz = sizer(docs.sparkSession, gramSets)
-    rankedGrams(grams, freq, gramSets, sz, leftJoinFreq = false)
-      .write.mode("overwrite").parquet(s"$path/ranked")
-    gramSets.write.mode("overwrite").parquet(s"$path/gramsets")
-    freq.write.mode("overwrite").parquet(s"$path/freq")
-    import docs.sparkSession.implicits._
-    Seq((sz.nDocs, sz.gramBytes)).toDF("n_docs", "gram_bytes")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Load a persisted set-sim index (stats read is one 1-row file). */
-  def readSetSimIndex(spark: SparkSession, path: String): SetSimIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
-    SetSimIndex(spark.read.parquet(s"$path/ranked"),
-      spark.read.parquet(s"$path/gramsets"),
-      spark.read.parquet(s"$path/freq"),
-      st.getLong(0), st.getLong(1))
+        varintDeltaPack(sort_array(collect_list(col("gid")))).as("gv"))
   }
 
   // one persisted set-sim index per (root, dir, corpus tag) per JVM;
@@ -211,7 +173,6 @@ trait SetSimIndexing { this: Dedup.type =>
       }) { (p, digest) =>
       val (gsTable, rkTable) = tables(digest)
       val docs = corpus(spark, dir)
-      graft.functions.GraftFunctions.register(spark)
       latin1Guard(docs)
       val grams = register(packedGrams(docs, idCol)
         .persist(StorageLevel.MEMORY_AND_DISK))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{pack8, sortedIntersectCount, varintDeltaPack}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -60,7 +61,6 @@ trait SetSimJoins { this: Dedup.type =>
     * pair space.
     */
   def setSimJoin(docs: DataFrame, idCol: String, tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     latin1Guard(docs)
     // grams feeds freq + ranked + gramSets, and prefix feeds both
     // sides of the candidate self-join: without these persists the
@@ -96,7 +96,6 @@ trait SetSimJoins { this: Dedup.type =>
     * the 1x-vs-10x rehearsal (ScaleRehearsal / BASELINE.md). */
   def setSimCandidates(docs: DataFrame, idCol: String,
       tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     latin1Guard(docs)
     val grams = packedGrams(docs, idCol)
     val gramSets = gramSetsOf(grams)
@@ -146,7 +145,6 @@ trait SetSimJoins { this: Dedup.type =>
     * its id while a small daily increment still broadcasts). */
   def setSimJoinIncremental(corpus: DataFrame, corpusId: String,
       newDocs: DataFrame, newId: String, tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     latin1Guard(corpus); latin1Guard(newDocs)
     val gramsC = packedGrams(corpus, corpusId)
     val gramsN = packedGrams(newDocs, newId)
@@ -264,8 +262,7 @@ trait SetSimJoins { this: Dedup.type =>
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("g64"))).as("gs"),
         count(lit(1)).as("n"),
-        call_function("varint_delta_pack",
-          sort_array(collect_list(col("id")))).as("gv"))
+        varintDeltaPack(sort_array(collect_list(col("id")))).as("gv"))
   }
 
   /** INJECTIVITY PRECONDITION (Latin-1): the 8-bit-per-char packing is
@@ -298,10 +295,9 @@ trait SetSimJoins { this: Dedup.type =>
     // fold it replaces (PackedShinglesSpec), which allocated a
     // substring per position and ran the lambda interpreted on the
     // hottest corpus scan of the whole set-sim family
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     register(docs
       .select(col(idCol).as("doc_id"),
-        explode(call_function("pack8", col("text"))).as("g64"))
+        explode(pack8(col("text"))).as("g64"))
       .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
@@ -422,7 +418,6 @@ trait SetSimJoins { this: Dedup.type =>
     * window, two consumers). */
   def containmentJoin(docs: DataFrame, idCol: String,
       tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     latin1Guard(docs)
     val grams = packedGrams(docs, idCol)
     val gramSets = gramSetsOf(grams)
@@ -433,8 +428,7 @@ trait SetSimJoins { this: Dedup.type =>
         col("gs").as("gs_a"), col("n").as("na")), sz.gramBytes), Seq("doc_a"))
       .join(sz(gramSets.select(col("doc_id").as("doc_b"),
         col("gs").as("gs_b")), sz.gramBytes), Seq("doc_b"))
-      .withColumn("ni", call_function("sorted_intersect_count",
-        col("gs_a"), col("gs_b")))
+      .withColumn("ni", sortedIntersectCount(col("gs_a"), col("gs_b")))
       .filter(col("ni") * lit(1000000L) >= lit(tPpm) * col("na"))
       .select(col("doc_a"), col("doc_b"),
         expr("CAST((ni * 1000000) DIV na AS BIGINT)")
@@ -465,7 +459,6 @@ trait SetSimJoins { this: Dedup.type =>
     * verify per side. */
   def containmentIncremental(corpus: DataFrame, corpusId: String,
       newDocs: DataFrame, newId: String, tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     latin1Guard(corpus); latin1Guard(newDocs)
     val gramsC = packedGrams(corpus, corpusId)
     val gramsN = packedGrams(newDocs, newId)
@@ -515,8 +508,7 @@ trait SetSimJoins { this: Dedup.type =>
       Seq("doc_a"))
     .join(szB(setsB.select(col("doc_id").as("doc_b"),
       col("gs").as("gs_b")), szB.gramBytes), Seq("doc_b"))
-    .withColumn("ni", call_function("sorted_intersect_count",
-      col("gs_a"), col("gs_b")))
+    .withColumn("ni", sortedIntersectCount(col("gs_a"), col("gs_b")))
     .filter(col("ni") * lit(1000000L) >= lit(tPpm) * col("na"))
     .select(col("doc_a"), col("doc_b"),
       expr("CAST((ni * 1000000) DIV na AS BIGINT)")
@@ -552,7 +544,6 @@ trait SetSimJoins { this: Dedup.type =>
     * inverted the asymmetry the persisted index exists for. */
   def containmentIncrementalQuery(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the corpus side rides its own persisted index snapshot (ranked
     // grams + signature table + the df order the ingest ranks by);
     // only the increment's grams are computed fresh — the deployment
@@ -631,7 +622,6 @@ trait SetSimJoins { this: Dedup.type =>
     * setSimCandidates twin). */
   def containmentCandidates(docs: DataFrame, idCol: String,
       tPpm: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     latin1Guard(docs)
     val grams = packedGrams(docs, idCol)
     val gramSets = gramSetsOf(grams)
@@ -677,7 +667,6 @@ trait SetSimJoins { this: Dedup.type =>
     * near-total), so the looser threshold bought nothing but
     * candidate volume. */
   def containmentNearDups(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // same persisted index as q126 — one corpus artifact serves both
     // the Jaccard and the containment family (the ranked table is
     // threshold- and measure-independent).
@@ -757,8 +746,7 @@ trait SetSimJoins { this: Dedup.type =>
         col("gs").as("gs_a"), col("n").as("na")), szA.gramBytes), Seq(aCol))
       .join(szB(setsB.select(col("doc_id").as(bCol),
         col("gs").as("gs_b"), col("n").as("nb")), szB.gramBytes), Seq(bCol))
-      .withColumn("ni", call_function("sorted_intersect_count",
-        col("gs_a"), col("gs_b")))
+      .withColumn("ni", sortedIntersectCount(col("gs_a"), col("gs_b")))
       .filter(col("ni") * lit(1000000L) >=
         lit(tPpm) * (col("na") + col("nb") - col("ni")))
       .select(col(aCol), col(bCol),
@@ -772,7 +760,6 @@ trait SetSimJoins { this: Dedup.type =>
     * the surviving pair set is tiny, so one post-shuffle partition
     * sorts it with the identical deterministic result. */
   def setSimNearDups(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // rides the persisted corpus index (first call builds it; steady
     // state — including a later JVM on the same corpus — is a parquet
     // probe, the honest per-query cost of a deployed exact-dedup
@@ -831,7 +818,6 @@ trait SetSimJoins { this: Dedup.type =>
     * scale and the oracle re-derives the cuts; nearest-rank values
     * are tie-order-invariant (the Theil–Sen rule). */
   def thresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sess = spark
     import sess.implicits._
     import org.apache.spark.sql.expressions.Window

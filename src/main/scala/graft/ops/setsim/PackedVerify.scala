@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.sortedVarintIntersectCount
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -51,8 +52,7 @@ trait SetSimPackedVerify { this: Dedup.type =>
           col("gv").as("gv_b"), col("n").as("nb"))
         .repartition(nP, col(bCol)).hint("shuffle_hash"),
         Seq(bCol))
-      .withColumn("ni", call_function("sorted_varint_intersect_count",
-        col("gv_a"), col("gv_b")))
+      .withColumn("ni", sortedVarintIntersectCount(col("gv_a"), col("gv_b")))
       .drop("gv_a", "gv_b")
       .filter(col("ni") * lit(1000000L) >=
         lit(tPpm) * (col("na") + col("nb") - col("ni")))
@@ -83,8 +83,7 @@ trait SetSimPackedVerify { this: Dedup.type =>
           col("gv").as("gv_b"))
         .repartition(nP, col("doc_b")).hint("shuffle_hash"),
         Seq("doc_b"))
-      .withColumn("ni", call_function("sorted_varint_intersect_count",
-        col("gv_a"), col("gv_b")))
+      .withColumn("ni", sortedVarintIntersectCount(col("gv_a"), col("gv_b")))
       .drop("gv_a", "gv_b")
       .filter(col("ni") * lit(1000000L) >= lit(tPpm) * col("na"))
       .select(col("doc_a"), col("doc_b"),

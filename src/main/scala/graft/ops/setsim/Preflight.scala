@@ -57,7 +57,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * ever materializes, and the warm gate measured scale-FLAT
     * (0.5–1.6 s across 1×/10×/100×). */
   def setSimPreflight(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = persistedSetSimIndex(spark, dir, "docs", Tables.documents _)
     setSimPreflightOn(idx.ranked, idx.gramSets, idx.nDocs, idx.gramBytes)
   }
@@ -67,7 +66,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * setSimNearDups vs setSimJoin (exact integer state throughout). */
   private[graft] def setSimPreflightDocs(docs: DataFrame,
       idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     latin1Guard(docs)
     val grams = packedGrams(docs, idCol)
     val freq = grams.groupBy(col("g64")).agg(count(lit(1)).as("df"))
@@ -159,7 +157,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * oracle replays — see the q259 doc for the custom-limit caveat,
     * ADVICE r14). */
   def containmentPreflight(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = persistedSetSimIndex(spark, dir, "docs", Tables.documents _)
     containmentPreflightOn(idx.ranked, idx.freq, idx.gramSets,
       idx.nDocs, idx.gramBytes)
@@ -412,7 +409,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * pair-forecast queries now share one methodology. */
   def setSimPreflightIncremental(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     // ONE corpus scan answers both driver questions (r16): the
     // newest-10% cutoff AND the Latin-1 injectivity guard — the
@@ -498,7 +494,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * itself is the ~1 s scale-flat read. */
   def setSimPreflightIncrementalIndexed(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val cutoff =
       (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 9L / 10L
@@ -526,7 +521,6 @@ trait SetSimPreflights { this: Dedup.type =>
     * frames — the marginal control cost. */
   def incrementalGateInstrument(spark: SparkSession, dir: String,
       tPpm: Long = 700000L): (() => Unit, () => (Long, Long)) = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val cutoff =
       (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 9L / 10L

@@ -122,8 +122,4 @@ object PgDdl {
         s"REFERENCES ${fk.refTable.split('.').map(quote).mkString(".")} " +
         s"(${fk.refColumns.map(quote).mkString(", ")})$onDel$onUpd"
     }
-
-  /** DROP for staging-table cleanup. */
-  def dropTable(t: TableMeta): String =
-    s"DROP TABLE IF EXISTS ${qualified(t)}"
 }

@@ -66,7 +66,6 @@ object EmbStream {
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       dir: String, outDir: String, stateDir: String, tauPpm: Long): Unit = {
     val s: SparkSession = batch.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val idx = Ivf.deterministicIndex(s, dir)
     val b = Ivf.assignToCells(
         batch.select(col("vec_id"), col("embedding")), idx.centroids)

@@ -31,6 +31,19 @@ class PipelineSpec extends SparkSpec {
     assert(curated.filter(length(col("content_hash")) =!= 64).count() == 0)
   }
 
+  test("curation drops an empty and a NULL text at the quality filter") {
+    // an empty text has no characters to divide punctuation by: it must
+    // score NULL and fall out at the quality filter, not fail the job
+    val good = "the quick brown fox jumps over a lazy dog and the day is " +
+      "long and of the morning a walk to the river is the best of plans"
+    val docs = Seq((1L, Some(good)), (2L, Some("")), (3L, None))
+      .toDF("doc_id", "text")
+    val (curated, report) = Pipeline.curate(docs)
+    assert(report.input == 3)
+    assert(report.afterQuality == 1)
+    assert(curated.select("doc_id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   test("PPJoin setSimJoin and LSH nearDupPairs find the same planted near pairs") {
     // the exact prefix join answers the same question as the MinHash
     // generator over the same shingle sets; on planted fixtures the
