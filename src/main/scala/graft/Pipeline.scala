@@ -87,11 +87,16 @@ object Pipeline {
     // even though `scored`/`exact` feed multiple downstream branches.
     // 1. narrow stages first: PII scrub (pure regexp projections) and
     // quality filter (shared scoring expression) shrink/clean the
-    // corpus before anything shuffles
-    val scrubbed = docs.observe(oIn, rows).withColumn("text",
-      graft.etl.Sanitize.redactPii(col("text")))
-    val scored = scrubbed
+    // corpus before anything shuffles. The input count sits between
+    // the scoring projection and the filter (a projection keeps the
+    // row count): CollectMetrics stops filter pushdown, which would
+    // otherwise inline the score — and the scrub under it — into a
+    // Filter below the scrub, running the PII regexes and the score
+    // again for every document.
+    val scored = docs
+      .withColumn("text", graft.etl.Sanitize.redactPii(col("text")))
       .withColumn("quality_score", TextAnalysis.qualityScore(col("text")))
+      .observe(oIn, rows)
       .filter(col("quality_score") >= minQuality)
       .observe(oQ, rows,
         round(avg(col("quality_score")), 6).as("avg_quality"))

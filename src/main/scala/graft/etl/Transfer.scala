@@ -2,6 +2,8 @@ package graft.etl
 
 import java.sql.Connection
 import java.util.Properties
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, Executors}
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 import graft.meta.TableMeta
 import graft.pg.{PgCatalog, PgDdl, SequenceSync}
@@ -20,11 +22,15 @@ import org.apache.spark.sql.functions.{coalesce, col, lag, lead, lit, round, str
   * JDBC writer (`batchsize` rows per round trip, one writer per
   * partition). At cluster scale both sides parallelize with the
   * executor count; the database becomes the bottleneck, not the engine.
+  * The reference also copies one table after another; [[migrate]]
+  * copies the tables in parallel. Writer connections stay bounded by
+  * executor cores, and the driver adds at most one publish connection
+  * per concurrent copy.
   *
   * Transactionality (SURVEY.md §7 risk 2): the reference commits per
   * table and can roll back (:136,141-143); Spark JDBC commits per
   * partition. [[atomicLoad]] restores all-or-nothing per table by
-  * writing to a staging table and publishing with a single
+  * writing to a staging table of its own and publishing with a single
   * INSERT..SELECT transaction on the driver.
   */
 object Transfer {
@@ -53,26 +59,40 @@ object Transfer {
       .option("batchsize", "1000")
       .jdbc(url, table, props)
 
-  /** All-or-nothing publish: batched write into a staging table named
-    * `<target>_staging` (dropped and rebuilt each run), then a single
-    * transactional INSERT INTO target. The staging write can retry/fail
-    * freely; the target only ever sees zero or all rows. */
+  /** All-or-nothing publish: batched write into a staging table this
+    * call owns (`<target>_staging_<random id>`, unique per call), then a
+    * single transactional INSERT INTO target. The staging write can
+    * retry/fail freely; the target only ever sees zero or all rows. The
+    * staging table is dropped on success and on failure, and no other
+    * table is ever dropped — so a `<target>_staging` that belongs to
+    * someone else survives, and concurrent loads of different targets
+    * never share a staging table. */
   def atomicLoad(df: DataFrame, url: String, targetTable: String,
       props: Properties, connFactory: () => Connection): Unit = {
     // a pre-quoted target ("t", the convention for Spark-created
-    // case-sensitive names) gets the suffix INSIDE the quotes
+    // case-sensitive names) gets the suffix INSIDE the quotes. A fresh
+    // name also means partial rows a failed earlier run left in its own
+    // staging table can never be published by this one.
+    val suffix = "_staging_" + java.util.UUID.randomUUID().toString.take(8)
     val staging =
-      if (targetTable.endsWith("\"")) targetTable.dropRight(1) + "_staging\""
-      else targetTable + "_staging"
-    // a previously failed run can leave partial rows in staging (the
-    // staging write commits per partition); start from a clean slate or
-    // the retry would publish leftovers + the new copy
-    locally {
-      val c = connFactory()
-      try c.createStatement().executeUpdate(s"DROP TABLE $staging")
-      catch { case NonFatal(_) => () } finally c.close()
+      if (targetTable.endsWith("\"")) targetTable.dropRight(1) + suffix + "\""
+      else targetTable + suffix
+    try {
+      writeJdbc(df, url, staging, props)
+      publish(df, targetTable, staging, connFactory)
+    } finally {
+      // the table is absent when the write failed before creating it
+      try {
+        val c = connFactory()
+        try c.createStatement().executeUpdate(s"DROP TABLE $staging")
+        finally c.close()
+      } catch { case NonFatal(_) => () }
     }
-    writeJdbc(df, url, staging, props)
+  }
+
+  /** One transaction: INSERT INTO target SELECT the staging rows. */
+  private def publish(df: DataFrame, targetTable: String, staging: String,
+      connFactory: () => Connection): Unit = {
     val conn = connFactory()
     try {
       conn.setAutoCommit(false)
@@ -115,7 +135,6 @@ object Transfer {
       val stagingCols = df.schema.fieldNames.map(q).mkString(", ")
       st.executeUpdate(
         s"INSERT INTO $targetTable ($targetCols) SELECT $stagingCols FROM $staging")
-      st.executeUpdate(s"DROP TABLE $staging")
       conn.commit()
     } catch {
       case NonFatal(e) => conn.rollback(); throw e
@@ -301,7 +320,9 @@ object Transfer {
   /** The reference's EP2 three-phase topology
     * (transfer_data_with_constraints_script.py:235-253): create all
     * tables without FKs → copy all data → add all FKs → sync
-    * sequences. Load order is independent of the FK graph.
+    * sequences. Load order is independent of the FK graph, so the
+    * phase-2 copies run concurrently (what `pg_restore --jobs` does
+    * for the same job); the reference copies one table after another.
     *
     * The reference also carries a phase-2 lazy create-if-missing
     * fallback (transfer_data_with_constraints_script.py:193-197);
@@ -309,15 +330,28 @@ object Transfer {
     * (IF NOT EXISTS), so that fallback has no work left to do and is
     * deliberately not replicated.
     *
+    * Threading: `execDdl` and `read` run on the caller's thread, in
+    * table order (phase 2 calls `read` once per table before any copy
+    * starts). Only `write` runs concurrently, on a pool this call
+    * creates and shuts down before it returns: at most one `write` per
+    * table, at most min(tables, `defaultParallelism` of the frames'
+    * SparkContext) at a time. The pool's threads are created by the
+    * caller, so every `write` sees the caller's Spark local properties
+    * (job group, scheduler pool, job tags). Phase 3 starts only after
+    * every copy has finished. Each copy waits at most 30 s, after its
+    * `write` returns, for the observed row count.
+    *
     * `exclude` holds qualified names kept out of every phase (R6).
     * Errors are isolated per table (R11): one [[TransferResult]] per
-    * selected table, `ok = false` with the first error if its copy,
-    * an FK or its sequence sync failed. */
+    * selected table, in `metas` order, `ok = false` with the first
+    * error if its read, its copy, an FK or its sequence sync failed. */
   def migrate(metas: Seq[TableMeta], exclude: Set[String],
       execDdl: String => Unit,
       read: TableMeta => DataFrame,
       write: (TableMeta, DataFrame) => Unit): Seq[TransferResult] = {
     val selected = metas.filterNot(m => exclude.contains(m.qualifiedName))
+    def failure(m: TableMeta, e: Throwable) =
+      TransferResult(m.qualifiedName, 0L, ok = false, Some(e.getMessage))
     // phase 1: DDL without FKs
     selected.foreach(m => execDdl(PgDdl.createTable(m)))
     // phase 2: data. The per-table row count rides an observe() node
@@ -328,9 +362,8 @@ object Transfer {
     // CONTRACT (same as curateObserved): `write` must execute exactly
     // one Spark action over the frame it is given — every real sink
     // (JDBC batch insert, parquet, noop) does.
-    val results = selected.map { m =>
+    def copy(m: TableMeta, df: DataFrame): TransferResult =
       try {
-        val df = read(m)
         val obs = new org.apache.spark.sql.Observation()
         write(m, df.observe(obs, org.apache.spark.sql.functions.count(
           lit(1)).as("rows")))
@@ -348,11 +381,30 @@ object Transfer {
         }
         TransferResult(m.qualifiedName,
           obs.get("rows").asInstanceOf[Long], ok = true)
-      } catch {
-        case NonFatal(e) =>
-          TransferResult(m.qualifiedName, 0L, ok = false, Some(e.getMessage))
+      } catch { case NonFatal(e) => failure(m, e) }
+    val frames = selected.map(m => m -> Try(read(m)))
+    val threads = frames.collectFirst { case (_, Success(df)) =>
+      math.min(selected.size, df.sparkSession.sparkContext.defaultParallelism)
+    }.getOrElse(1)
+    // a per-call pool, not a shared one: its threads are created here,
+    // on the caller's thread, which is what hands them its local
+    // properties; joining them leaves no thread behind
+    val workers = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(threads,
+      { (r: Runnable) =>
+        val t = new Thread(r, s"graft-migrate-copy-${workers.size}")
+        workers.add(t)
+        t
+      })
+    val results =
+      try frames.map {
+        case (m, Success(df)) => pool.submit(() => copy(m, df))
+        case (m, Failure(e)) => CompletableFuture.completedFuture(failure(m, e))
+      }.map(_.get())
+      finally {
+        pool.shutdown()
+        workers.forEach(_.join())
       }
-    }
     // phases 3–4 isolate each statement like the reference (:163-171):
     // a failure does not stop the rest, but marks its table's result
     // failed with the first error, so ok = true means fully migrated

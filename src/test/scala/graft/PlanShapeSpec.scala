@@ -586,6 +586,24 @@ class PlanShapeSpec extends SparkSpec {
     assert(n == 1, s"expected 1 JsonToStructs in the optimized plan, got $n")
   }
 
+  test("curation scores each document once: no Filter re-runs the PII scrub") {
+    // The quality filter sits above the input count's CollectMetrics,
+    // a pushdown barrier. Were the count below the scrub, filter
+    // pushdown would inline qualityScore(redactPii(text)) into a Filter
+    // under the scrub Project, running the PII regexes and the score
+    // again for every document.
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val oc = Pipeline.curateObserved(Tables.documents(spark, sf))
+    // without the caches the optimized plan shows every stage's Filter
+    oc.release()
+    val scrubbing = oc.curated.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[RegExpReplace]) => f
+    }
+    assert(scrubbing.isEmpty,
+      s"Filter re-runs the PII scrub: ${scrubbing.map(_.condition.sql.take(200))}")
+  }
+
   test("q202 pair-count exchange is runtime-shared by all consumers (plan pin)") {
     // r16: the persist is GONE (it pinned the tiny pair table at
     // shuffle.partitions partitions — the suite's one anti-scaling);

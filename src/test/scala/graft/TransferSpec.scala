@@ -104,10 +104,47 @@ class TransferSpec extends SparkSpec {
       () => DriverManager.getConnection(derbyUrl))
     val back = spark.read.jdbc(derbyUrl, "ATOMIC_T", props)
     assert(back.count() == 3)
-    // staging table is gone
+    // no staging table is left, under any suffix
     val c2 = DriverManager.getConnection(derbyUrl)
-    val rs = c2.getMetaData.getTables(null, null, "ATOMIC_T_STAGING", null)
+    val rs = c2.getMetaData.getTables(null, null, "ATOMIC_T_STAGING%", null)
     assert(!rs.next()); c2.close()
+  }
+
+  test("atomicLoad leaves an unrelated <target>_staging table alone") {
+    // a schema may hold both t and t_staging: loading t must neither
+    // drop t_staging nor publish its rows
+    val conn = DriverManager.getConnection(derbyUrl)
+    val st = conn.createStatement()
+    st.executeUpdate("CREATE TABLE APP.ATOMIC_U (X BIGINT)")
+    st.executeUpdate("CREATE TABLE APP.ATOMIC_U_STAGING (X BIGINT)")
+    st.executeUpdate("INSERT INTO APP.ATOMIC_U_STAGING VALUES (7), (8), (9)")
+    conn.close()
+    Transfer.atomicLoad(Seq(1L, 2L).toDF("X"), derbyUrl, "APP.ATOMIC_U",
+      props, () => DriverManager.getConnection(derbyUrl))
+    def rows(t: String) = spark.read.jdbc(derbyUrl, t, props)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows("APP.ATOMIC_U") == Seq(1L, 2L))
+    assert(rows("APP.ATOMIC_U_STAGING") == Seq(7L, 8L, 9L))
+    val c2 = DriverManager.getConnection(derbyUrl)
+    val rs = c2.getMetaData.getTables(null, "APP", "ATOMIC_U_STAGING_%", null)
+    assert(!rs.next(), "the call's own staging table was left behind"); c2.close()
+  }
+
+  test("atomicLoad drops its staging table when the staging write fails") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val conn = DriverManager.getConnection(derbyUrl)
+    conn.createStatement().executeUpdate("CREATE TABLE APP.ATOMIC_D (X BIGINT)")
+    conn.close()
+    val df = (1L to 20L).toDF("X").repartition(4)
+      .withColumn("X", when(col("X") === 13L, raise_error(lit("poisoned row")))
+        .otherwise(col("X")))
+    intercept[Exception] {
+      Transfer.atomicLoad(df, derbyUrl, "APP.ATOMIC_D", props,
+        () => DriverManager.getConnection(derbyUrl))
+    }
+    val c2 = DriverManager.getConnection(derbyUrl)
+    val rs = c2.getMetaData.getTables(null, "APP", "ATOMIC_D_STAGING%", null)
+    assert(!rs.next(), "a failed load left its staging table behind"); c2.close()
   }
 
   test("atomicLoad retry after leftover staging rows publishes exactly once") {
@@ -354,6 +391,90 @@ class TransferSpec extends SparkSpec {
     assert(results.head.ok && results.head.rows == 2)
     assert(acc.value == 2L,
       s"expected one scan of 2 rows, saw ${acc.value} row-reads")
+  }
+
+  /** Tables with one non-serial column: phase 4 never reads them. */
+  private def plainTables(names: String*) = {
+    import graft.meta.{ColumnMeta, TableMeta}
+    import org.apache.spark.sql.types.LongType
+    names.map(n => TableMeta(Some("public"), n,
+      columns = Seq(ColumnMeta("id", LongType, nullable = false))))
+  }
+
+  private def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("migrate copies tables concurrently") {
+    // each write waits for the other one: copied one after another,
+    // the first wait times out and both tables fail
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val data = Seq(1L, 2L).toDF("id")
+    val results = Transfer.migrate(plainTables("conc_a", "conc_b"),
+      exclude = Set.empty, execDdl = _ => (), read = _ => data,
+      write = { (_, df) =>
+        barrier.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        noopWrite(df)
+      })
+    assert(results.forall(r => r.ok && r.rows == 2), results)
+  }
+
+  test("migrate calls read and execDdl on the caller's thread, in table order") {
+    val caller = Thread.currentThread()
+    val calls = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(String, Thread)]())
+    val tables = plainTables("ord_a", "ord_b", "ord_c")
+    val data = Seq(1L).toDF("id")
+    Transfer.migrate(tables, exclude = Set.empty,
+      execDdl = sql => calls.add(("ddl " + sql.split('"')(3), Thread.currentThread())),
+      read = { m => calls.add(("read " + m.name, Thread.currentThread())); data },
+      write = (_, df) => noopWrite(df))
+    import scala.jdk.CollectionConverters._
+    val seen = calls.asScala.toSeq
+    assert(seen.forall(_._2 eq caller), seen)
+    assert(seen.map(_._1) == tables.map("ddl " + _.name) ++ tables.map("read " + _.name))
+  }
+
+  test("migrate hands the caller's Spark local properties to every write") {
+    val sc = spark.sparkContext
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val data = Seq(1L).toDF("id")
+    sc.setLocalProperty("graft.test.migrate", "caller")
+    try Transfer.migrate(plainTables("prop_a", "prop_b", "prop_c"),
+      exclude = Set.empty, execDdl = _ => (), read = _ => data,
+      write = { (m, df) =>
+        seen.add(m.name + "=" + sc.getLocalProperty("graft.test.migrate"))
+        noopWrite(df)
+      })
+    finally sc.setLocalProperty("graft.test.migrate", null)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala == Set("prop_a=caller", "prop_b=caller", "prop_c=caller"))
+  }
+
+  test("migrate isolates a failing write and keeps results in table order") {
+    val data = Seq(1L, 2L, 3L).toDF("id")
+    val results = Transfer.migrate(plainTables("iso_a", "iso_b", "iso_c", "iso_d"),
+      exclude = Set.empty, execDdl = _ => (), read = _ => data,
+      write = { (m, df) =>
+        if (m.name == "iso_b") throw new IllegalStateException("sink refused")
+        noopWrite(df)
+      })
+    assert(results.map(_.table) ==
+      Seq("public.iso_a", "public.iso_b", "public.iso_c", "public.iso_d"))
+    assert(results.map(_.ok) == Seq(true, false, true, true))
+    assert(results.map(_.rows) == Seq(3L, 0L, 3L, 3L))
+    assert(results(1).error.contains("sink refused"))
+  }
+
+  test("migrate leaves no copy thread alive when it returns") {
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val data = Seq(1L).toDF("id")
+    val results = Transfer.migrate(plainTables("thr_a", "thr_b", "thr_c"),
+      exclude = Set.empty, execDdl = _ => (), read = _ => data,
+      write = { (_, df) => writers.add(Thread.currentThread()); noopWrite(df) })
+    import scala.jdk.CollectionConverters._
+    assert(results.forall(_.ok) && !writers.isEmpty)
+    val alive = writers.asScala.filter(_.isAlive)
+    assert(alive.isEmpty, s"threads alive after migrate: ${alive.map(_.getName)}")
   }
 
   test("migrate marks a table failed when an FK statement fails, and carries on") {
