@@ -82,9 +82,9 @@ object Pipeline {
     val (oIn, oQ, oE, oN) =
       (Observation(), Observation(), Observation(), Observation())
     def rows = count(lit(1)).as("rows")
-    // Each observe() sits BELOW its stage's persist, so the node lands
+    // Each observe() sits BELOW the `exact` persist, so the node lands
     // inside the cached plan and fires exactly once per materialization
-    // even though `scored`/`exact` feed multiple downstream branches.
+    // even though `exact` feeds multiple downstream branches.
     // 1. narrow stages first: PII scrub (pure regexp projections) and
     // quality filter (shared scoring expression) shrink/clean the
     // corpus before anything shuffles. The input count sits between
@@ -100,12 +100,12 @@ object Pipeline {
       .filter(col("quality_score") >= minQuality)
       .observe(oQ, rows,
         round(avg(col("quality_score")), 6).as("avg_quality"))
-      .persist()
-    // 2. exact dedup: keep the lowest doc_id per content hash
-    val keep = scored.groupBy(sha2(col("text"), 256).as("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val exact = scored.join(keep, "doc_id").observe(oE, rows).persist()
+    // 2. exact dedup: per content hash, the row with the lowest doc_id
+    // (none if all are NULL); no join back, so no fan-out on a repeat
+    val exact = scored.groupBy(sha2(col("text"), 256))
+      .agg(min_by(struct(scored.columns.map(col): _*), col("doc_id")).as("row"))
+      .where(col("row").isNotNull).select("row.*")
+      .observe(oE, rows).persist()
     // 3. near-dedup (MinHash-LSH): drop the higher doc_id of each
     // near-dup pair. The signature table is built HERE, untracked, so
     // this run owns exactly its own cache lifecycle (the global
@@ -121,7 +121,7 @@ object Pipeline {
     val curated = TextAnalysis.winnowed(curatedBase)
       .withColumn("content_hash", sha2(col("text"), 256))
     ObservedCuration(curated, oIn, oQ, oE, oN,
-      () => { scored.unpersist(); exact.unpersist(); sigs.unpersist(): Unit })
+      () => { exact.unpersist(); sigs.unpersist(): Unit })
   }
 
   /** Demo main: curate the documents table, print the funnel, write

@@ -1,15 +1,14 @@
 package graft.pg
 
 import graft.meta.TableMeta
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{coalesce, lit, max}
 
 /** Serial-sequence synchronization (reference op R10).
   *
   * The reference does this entirely server-side in PL/pgSQL loops over
-  * pg_tables (after-running-script.sql:1-126). Engine form: compute
-  * MAX(id) with a Spark aggregate (pushed down to the source when the
-  * source is JDBC), then emit one setval statement per serial column.
+  * pg_tables (after-running-script.sql:1-126). Engine form: the MAX of
+  * each serial column is observed on the copy's own write action
+  * (`Transfer.migrate`), so no second scan or aggregate job runs, and
+  * one setval statement per serial column is emitted from it.
   * The empty-table edge case uses the COALESCE(max,0)+1,false form the
   * reference's hardened third block adopts
   * (after-running-script.sql:99-103) — plain setval(seq, 0) would throw
@@ -17,14 +16,9 @@ import org.apache.spark.sql.functions.{coalesce, lit, max}
   */
 object SequenceSync {
 
-  /** MAX of a serial column; -1 sentinel when the table is empty. */
-  def maxId(df: DataFrame, column: String): Long =
-    df.agg(coalesce(max(df(column)).cast("long"), lit(-1L)))
-      .head().getLong(0)
-
   /** The setval statement for one serial column. Mirrors
-    * after-running-script.sql:99-103: for an empty table, set the
-    * sequence to 1 with is_called=false so nextval yields 1. */
+    * after-running-script.sql:99-103: for an empty table (`maxVal` < 1),
+    * set the sequence to 1 with is_called=false so nextval yields 1. */
   def setvalSql(t: TableMeta, column: String, maxVal: Long): String = {
     val qualified = t.schema.fold(PgDdl.quote(t.name))(s =>
       s"${PgDdl.quote(s)}.${PgDdl.quote(t.name)}")
@@ -35,8 +29,4 @@ object SequenceSync {
     if (maxVal >= 1) s"SELECT setval($seq, $maxVal, true)"
     else s"SELECT setval($seq, 1, false)"
   }
-
-  /** All setval statements for a loaded table. */
-  def syncStatements(t: TableMeta, df: DataFrame): Seq[String] =
-    t.serialColumns.map(c => setvalSql(t, c.name, maxId(df, c.name)))
 }

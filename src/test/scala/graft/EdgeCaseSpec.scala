@@ -94,8 +94,14 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("sequence sync maxId sentinel on an empty table") {
+    // an empty copy has no MAX: the sync falls back to nextval = 1
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
     val empty = Seq.empty[Long].toDF("id")
-    assert(graft.pg.SequenceSync.maxId(empty, "id") == -1L)
+    val results = graft.etl.Transfer.migrate(Seq(Fixtures.analyticsEvent),
+      exclude = Set.empty, execDdl = ddl += _, read = _ => empty,
+      write = (_, df) => df.write.format("noop").mode("overwrite").save())
+    assert(results.head.ok && results.head.rows == 0)
+    assert(ddl.last.contains("setval(") && ddl.last.endsWith(", 1, false)"), ddl.last)
   }
 
   private def scdRows(df: org.apache.spark.sql.DataFrame) =

@@ -85,8 +85,12 @@ class PgLiveSpec extends SparkSpec {
         "CREATE TABLE graft_live_seq (id BIGSERIAL PRIMARY KEY, v TEXT)",
         "INSERT INTO graft_live_seq (id, v) VALUES (7, 'a'), (42, 'b')")
       val meta = PgCatalog.tableMeta(conn, Some("public"), "graft_live_seq")
-      val loaded = Seq((7L, "a"), (42L, "b")).toDF("id", "v")
-      SequenceSync.syncStatements(meta, loaded).foreach(exec(conn, _))
+      // the engine observes MAX(id) on the copy; here the loaded rows
+      // give it, with 0 (no rows) for setvalSql's empty form
+      def sync(m: TableMeta, loaded: org.apache.spark.sql.DataFrame): Unit =
+        m.serialColumns.foreach(c => exec(conn, SequenceSync.setvalSql(m, c.name,
+          loaded.agg(coalesce(max(c.name).cast("long"), lit(0L))).head().getLong(0))))
+      sync(meta, Seq((7L, "a"), (42L, "b")).toDF("id", "v"))
       val rs = conn.createStatement()
         .executeQuery("SELECT nextval(pg_get_serial_sequence('graft_live_seq','id'))")
       rs.next()
@@ -96,8 +100,7 @@ class PgLiveSpec extends SparkSpec {
         "DROP TABLE IF EXISTS graft_live_seq0",
         "CREATE TABLE graft_live_seq0 (id BIGSERIAL PRIMARY KEY, v TEXT)")
       val meta0 = PgCatalog.tableMeta(conn, Some("public"), "graft_live_seq0")
-      val empty = Seq.empty[(Long, String)].toDF("id", "v")
-      SequenceSync.syncStatements(meta0, empty).foreach(exec(conn, _))
+      sync(meta0, Seq.empty[(Long, String)].toDF("id", "v"))
       val rs0 = conn.createStatement()
         .executeQuery("SELECT nextval(pg_get_serial_sequence('graft_live_seq0','id'))")
       rs0.next()

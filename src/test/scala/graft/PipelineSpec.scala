@@ -44,6 +44,25 @@ class PipelineSpec extends SparkSpec {
     assert(curated.select("doc_id").as[Long].collect().toSeq == Seq(1L))
   }
 
+  test("exact dedup keeps one row per content hash under a repeated doc_id") {
+    // (1, t1) and (2, t1) are exact copies and doc_id 1 is used twice:
+    // keeping "the lowest doc_id" by joining it back on doc_id would
+    // return both rows that carry doc_id 1 for each of their hashes
+    val t1 = "the catalyst optimizer rewrites logical plans into " +
+      "physical plans of the engine and a broadcast join is the fast path"
+    val tA = "the quick brown fox jumps over a lazy dog and the day is long " +
+      "and of the morning a walk to the river is the best of plans"
+    val tB = "a column store keeps each attribute in its own file and the " +
+      "scan reads only the columns that the query of the day needs"
+    val docs = Seq((1L, t1), (1L, tA), (2L, t1), (3L, tB)).toDF("doc_id", "text")
+    val (curated, report) = Pipeline.curate(docs, minQuality = 0.0)
+    assert(report.input == 4 && report.afterExact == 3, report)
+    val out = curated.select("doc_id").as[Long].collect().groupBy(identity)
+      .map { case (id, ids) => id -> ids.length }
+    val in = Map(1L -> 2, 2L -> 1, 3L -> 1)
+    assert(out.forall { case (id, n) => n <= in.getOrElse(id, 0) }, out)
+  }
+
   test("PPJoin setSimJoin and LSH nearDupPairs find the same planted near pairs") {
     // the exact prefix join answers the same question as the MinHash
     // generator over the same shingle sets; on planted fixtures the

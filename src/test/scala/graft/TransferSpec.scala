@@ -374,8 +374,8 @@ class TransferSpec extends SparkSpec {
   test("migrate reads each table once when the writer runs an action") {
     import graft.meta.{ColumnMeta, TableMeta}
     import org.apache.spark.sql.types.{LongType, VarcharType}
-    // no serial column: phase 4 (sequence sync) has no second,
-    // by-design read, so the accumulator isolates phase 2 exactly
+    // no serial column, so this pins the plain copy path; the serial
+    // case below pins that the sequence sync reads nothing either
     val meta = TableMeta(Some("public"), "plain_table",
       columns = Seq(ColumnMeta("id", LongType, nullable = false),
         ColumnMeta("name", VarcharType(16), nullable = true)))
@@ -393,7 +393,77 @@ class TransferSpec extends SparkSpec {
       s"expected one scan of 2 rows, saw ${acc.value} row-reads")
   }
 
-  /** Tables with one non-serial column: phase 4 never reads them. */
+  test("migrate reads a serial table once and syncs its sequence from the copied rows") {
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    var reads = 0
+    val acc = spark.sparkContext.longAccumulator("serial_scans")
+    val data = Seq((7L, "e1"), (42L, "e2")).toDS()
+      .map { t => acc.add(1); t }.toDF("id", "name")
+    val results = Transfer.migrate(Seq(Fixtures.analyticsEvent),
+      exclude = Set.empty, execDdl = ddl += _,
+      read = { _ => reads += 1; data },
+      write = (_, d) => noopWrite(d))
+    assert(results.head.ok && results.head.rows == 2, results)
+    // the MAX rides the copy's own action: no second read, no MAX job
+    assert(reads == 1 && acc.value == 2L,
+      s"expected one read of 2 rows, saw $reads reads and ${acc.value} row-reads")
+    assert(ddl.filter(_.contains("setval")) == Seq(
+      "SELECT setval(pg_get_serial_sequence('\"public\".\"analytics_analyticsevent\"', " +
+        "'id'), 42, true)"))
+  }
+
+  test("migrate syncs an empty serial table's sequence to 1 from its one read") {
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    var reads = 0
+    val results = Transfer.migrate(Seq(Fixtures.analyticsEvent),
+      exclude = Set.empty, execDdl = ddl += _,
+      read = { _ => reads += 1; Seq.empty[(Long, String)].toDF("id", "name") },
+      write = (_, d) => noopWrite(d))
+    assert(results.head.ok && results.head.rows == 0, results)
+    assert(reads == 1, s"read $reads times")
+    val sync = ddl.filter(_.contains("setval"))
+    assert(sync.size == 1 && sync.head.endsWith("'id'), 1, false)"), sync)
+  }
+
+  test("migrate fails a table whose frame lacks its serial column") {
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = Transfer.migrate(Seq(Fixtures.analyticsEvent),
+      exclude = Set.empty, execDdl = ddl += _,
+      read = _ => Seq("e1").toDF("name"),
+      write = (_, d) => noopWrite(d))
+    assert(!results.head.ok && results.head.rows == 0, results)
+    // its FKs are still tried, as for any failed copy; nothing to sync
+    assert(ddl.count(_.contains("FOREIGN KEY")) == 3)
+    assert(!ddl.exists(_.contains("setval")), ddl)
+  }
+
+  test("migrate isolates a failed CREATE") {
+    val ddl = scala.collection.mutable.ArrayBuffer.empty[String]
+    val reads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val refused = Fixtures.analyticsEvent
+    val tables = plainTables("cf_a") ++ Seq(refused) ++ plainTables("cf_c")
+    val data = Seq((1L, "e1"), (2L, "e2")).toDF("id", "name")
+    val results = Transfer.migrate(tables, exclude = Set.empty,
+      execDdl = { sql =>
+        if (sql.startsWith("CREATE TABLE") && sql.contains(refused.name))
+          throw new java.sql.SQLException("create refused")
+        ddl += sql
+      },
+      read = { m => reads.add(m.name); data.select("id") },
+      write = { (m, df) => written.add(m.name); noopWrite(df) })
+    assert(results.map(_.table) ==
+      Seq("public.cf_a", refused.qualifiedName, "public.cf_c"))
+    assert(results.map(_.ok) == Seq(true, false, true))
+    assert(results.map(_.rows) == Seq(2L, 0L, 2L))
+    assert(results(1).error.contains("create refused"))
+    import scala.jdk.CollectionConverters._
+    assert(reads.asScala == Set("cf_a", "cf_c") && written.asScala == Set("cf_a", "cf_c"))
+    // none of its own FK statements, no setval
+    assert(!ddl.exists(_.contains(refused.name)), ddl)
+  }
+
+  /** Tables with one non-serial column: phase 4 emits nothing for them. */
   private def plainTables(names: String*) = {
     import graft.meta.{ColumnMeta, TableMeta}
     import org.apache.spark.sql.types.LongType
