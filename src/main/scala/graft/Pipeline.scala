@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.GraftFunctions.{minhash64, shingle8}
 import graft.ops.{Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,11 +66,12 @@ object Pipeline {
     * an `observe()` metric collected WHILE the caller's single output
     * action runs — the production shape, where a 100 TB curation run
     * cannot afford four extra passes just to report its funnel. The
-    * persists remain (shared subplans — the LSH band join reads the
-    * exact-dedup result three ways) but nothing forces them early;
-    * they materialize inside the one action, firing the observe nodes
-    * exactly once. Metrics are read with `Observation.get` AFTER the
-    * action completes; `release()` drops this run's caches. */
+    * one persist remains (a shared subplan — the LSH bands, the
+    * estimate's two signature joins, the verify's text joins and the
+    * survivors all read the exact-dedup result) but nothing forces it
+    * early; it materializes inside the one action, firing the observe
+    * nodes exactly once. Metrics are read with `Observation.get` AFTER
+    * the action completes; `release()` drops this run's cache. */
   final case class ObservedCuration(curated: DataFrame,
       input: Observation,
       afterQuality: Observation,
@@ -101,27 +103,31 @@ object Pipeline {
       .observe(oQ, rows,
         round(avg(col("quality_score")), 6).as("avg_quality"))
     // 2. exact dedup: per content hash, the row with the lowest doc_id
-    // (none if all are NULL); no join back, so no fan-out on a repeat
+    // (none if all are NULL); no join back, so no fan-out on a repeat.
+    // The MinHash signature is computed above the aggregate, inside
+    // this one cache, so the shuffle does not carry it and the LSH
+    // stages read it from here. The cache is this run's own, untracked
+    // by Dedup's global registry, so a concurrent unpersistCaches
+    // cannot strip it mid-flight.
     val exact = scored.groupBy(sha2(col("text"), 256))
       .agg(min_by(struct(scored.columns.map(col): _*), col("doc_id")).as("row"))
       .where(col("row").isNotNull).select("row.*")
-      .observe(oE, rows).persist()
+      .observe(oE, rows)
+      .withColumn("sig", minhash64(shingle8(col("text"))))
+      .persist()
     // 3. near-dedup (MinHash-LSH): drop the higher doc_id of each
-    // near-dup pair. The signature table is built HERE, untracked, so
-    // this run owns exactly its own cache lifecycle (the global
-    // registry would let a concurrent unpersistCaches strip it
-    // mid-flight, and repeated runs would grow the registry unboundedly)
-    val sigs = Dedup.signatureTable(exact, "doc_id", track = false)
+    // near-dup pair
     val nearPairs = Dedup.nearDupPairs(exact, "doc_id", nearDupJaccard,
-        sigsOpt = Some(sigs))
+        sigsOpt = Some(exact.select("doc_id", "sig")))
       .select(col("doc_b").as("doc_id")).distinct()
-    val curatedBase = exact.join(nearPairs, Seq("doc_id"), "left_anti")
+    val curatedBase = exact.drop("sig")
+      .join(nearPairs, Seq("doc_id"), "left_anti")
       .observe(oN, rows)
     // 4. fingerprint the survivors (downstream incremental dedup key)
     val curated = TextAnalysis.winnowed(curatedBase)
       .withColumn("content_hash", sha2(col("text"), 256))
     ObservedCuration(curated, oIn, oQ, oE, oN,
-      () => { exact.unpersist(); sigs.unpersist(): Unit })
+      () => exact.unpersist(): Unit)
   }
 
   /** Demo main: curate the documents table, print the funnel, write

@@ -220,20 +220,4 @@ final case class BpeMergeTable(pairs: Array[(String, String)])
     }
     len
   }
-
-  /** Plain-Scala reference for differential testing. */
-  def encodeReference(w: String): Seq[String] = {
-    var toks = w.codePoints().toArray.toSeq
-      .map(cp => new String(Character.toChars(cp)))
-    pairs.foreach { case (a, b) =>
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      toks.foreach { x =>
-        if (out.nonEmpty && out.last == a && x == b)
-          out(out.length - 1) = a + b
-        else out += x
-      }
-      toks = out.toSeq
-    }
-    toks
-  }
 }

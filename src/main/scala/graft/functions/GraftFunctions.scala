@@ -133,16 +133,4 @@ object GraftFunctions {
     h = (h ^ (h >>> 27)) * java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
     h ^ (h >>> 31)
   }
-
-  /** Plain-Scala reference implementation for differential testing. */
-  def rollingHash64Reference(s: String): Long = {
-    val bytes = s.getBytes("UTF-8")
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L
-      i += 1
-    }
-    h
-  }
 }

@@ -20,8 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * occurs inside a UTF-8 multibyte sequence), empty tokens between
   * consecutive/leading/trailing spaces are kept and hashed, and the
   * empty string yields the single empty token. Bit i of the result is
-  * set when the per-bit vote count is >= 0 (ties set the bit), matching
-  * the interpreted form kept in `Dedup.simhashExprInterpreted`.
+  * set when the per-bit vote count is >= 0 (ties set the bit).
   */
 case class SimHash64(child: Expression, fnv: Boolean = false)
     extends UnaryExpression {

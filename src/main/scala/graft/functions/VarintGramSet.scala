@@ -136,17 +136,4 @@ object VarintGramSet {
     }
     n
   }
-
-  /** Plain-Scala reference for differential testing. */
-  def packReference(xs: Seq[Long]): Array[Byte] = {
-    val out = scala.collection.mutable.ArrayBuffer[Byte]()
-    var prev = 0L
-    xs.foreach { x =>
-      var v = x - prev
-      prev = x
-      while ((v & ~0x7fL) != 0L) { out += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
-      out += v.toByte
-    }
-    out.toArray
-  }
 }

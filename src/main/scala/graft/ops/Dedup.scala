@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.GraftFunctions.{eqCount, minhash64, pack8S4,
-  rollingHash, shingle8, simhash64, simhash64Fnv, sortedIntersectCount,
-  wordGramsArr}
+  shingle8, simhash64, simhash64Fnv, sortedIntersectCount, wordGramsArr}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -280,8 +279,8 @@ object Dedup extends SetSimJoins with SetSimIndexing
   // 16 bands × 4 rows: pair-collision probability 1-(1-J^4)^16 —
   // ≈99.95% recall at J=0.78 while background pairs (J≈0.04 in this
   // corpus, measured) collide with p≈4e-5, so candidates stay rare.
-  // The band join carries only ids, so even a skewed bucket costs
-  // little; a sharper curve (8×8) was measured to drop planted
+  // The bucket aggregate carries only ids, so even a skewed bucket
+  // costs little; a sharper curve (8×8) was measured to drop planted
   // near-dups at J≈0.79 to ~70% recall.
   val Bands = 16
   val RowsPerBand: Int = NumHashes / Bands
@@ -302,10 +301,11 @@ object Dedup extends SetSimJoins with SetSimIndexing
 
   /** (id, band_id, band_hash) rows for a signature table — THE banding
     * scheme, shared by same-corpus and incremental candidate
-    * generation. Ids only: the band join must never carry shingle
-    * arrays or signatures — at scale the candidate set can be orders
-    * of magnitude larger than the corpus, so every byte on the
-    * candidate row multiplies the shuffle. */
+    * generation. Ids only: the band rows must never carry shingle
+    * arrays or signatures — there are `Bands` of them per document,
+    * and the candidate set can be orders of magnitude larger than the
+    * corpus, so every byte on a band or candidate row multiplies the
+    * shuffle. */
   def bandedIds(sigs: DataFrame, idAs: String): DataFrame =
     sigs.select(col(sigs.columns.head).as(idAs),
       posexplode(array((0 until Bands).map(b =>
@@ -334,14 +334,23 @@ object Dedup extends SetSimJoins with SetSimIndexing
       .filter(col("est_j") >= minJaccard - 0.2)
       .select(aCol, bCol)
 
-  /** Band-join bucket-size cap: above this, a bucket's pairs switch
+  /** Bucket-size cap: above this, a bucket's pairs switch
     * from all-pairs to star pairing. A corpus with a 10k-copy
     * boilerplate cluster puts all 10k ids into ONE (band, hash) bucket
     * in every band — 10^8 candidate pairs from a single key, the
     * quadratic blowup the banding scheme exists to avoid. */
   val MaxBucket = 256
 
-  /** LSH candidate pairs within one corpus (ids only).
+  /** LSH candidate pairs within one corpus (ids only), as
+    * (doc_a, doc_b) with doc_a < doc_b.
+    *
+    * One aggregate per (band, hash) bucket collects its sorted ids;
+    * pairs are then emitted inside each bucket row, so the only
+    * exchange before the pair dedup is the aggregate's.
+    * `collect_list` skips NULL ids, so a NULL id neither pairs nor
+    * counts toward the bucket size. Memory: one row holds a whole
+    * bucket's ids, 8 B per member for a bigint id, so a 10k-copy
+    * cluster is one 80 KB row per band.
     *
     * Degenerate-bucket guard: buckets with more than `maxBucket`
     * members emit (bucket-min-id, member) star pairs instead of
@@ -351,45 +360,42 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * content, which all verifies against the representative; the
     * estimate/exact stages still prune false edges). Salting would
     * only split the bucket while silently LOSING cross-salt pairs —
-    * star pairing keeps the linear cost without that recall hole.
-    * The bucket-size window shuffles on the same (band, hash) key the
-    * join needs anyway, so no extra exchange is planned. */
+    * star pairing keeps the linear cost without that recall hole. */
   def lshCandidatePairs(sigs: DataFrame, idCol: String,
       maxBucket: Int = MaxBucket): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("band_id"), col("band_hash"))
-    val sized = bandedIds(sigs.select(col(idCol), col("sig")), "__band_id_col")
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("rep", min(col("__band_id_col")).over(w))
-    val small = sized.filter(col("bucket_n") <= maxBucket)
-    val smallPairs = small.select(col("__band_id_col").as("doc_a"),
-        col("band_id"), col("band_hash"))
-      .join(small.select(col("__band_id_col").as("doc_b"), col("band_id"),
-        col("band_hash")), Seq("band_id", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-    val starPairs = sized
-      .filter(col("bucket_n") > maxBucket && col("__band_id_col") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("__band_id_col").as("doc_b"))
-    smallPairs.unionByName(starPairs).dropDuplicates("doc_a", "doc_b")
+    val ids = col("ids")
+    bandedIds(sigs.select(col(idCol), col("sig")), "__band_id_col")
+      .groupBy(col("band_id"), col("band_hash"))
+      .agg(sort_array(collect_list(col("__band_id_col"))).as("ids"))
+      .where(size(ids) > 1)
+      .select(ids, posexplode(ids).as(Seq("i", "doc_a")))
+      // a small bucket pairs each member with every later one; a
+      // large one pairs only ids[0], its min id, with the rest
+      .where(size(ids) <= maxBucket || col("i") === 0)
+      .select(col("doc_a"),
+        explode(slice(ids, col("i") + 2, size(ids))).as("doc_b"))
+      // sorted ids: this keeps j > i and drops a repeated id's self pair
+      .where(col("doc_a") < col("doc_b"))
+      .dropDuplicates("doc_a", "doc_b")
   }
 
   /** Materialized (id, sig) signature table. Shingling + minhashing is
     * the most expensive linear pass over the corpus, and the LSH
-    * pipeline references signatures from four plan branches (band
-    * self-join ×2, estimate-prune ×2) — without materialization
-    * Catalyst recomputes the shingling per branch (six corpus
-    * re-shinglings in the round-1 q41 plan). Only the 512-byte
-    * signatures are cached, NOT the shingle arrays (~8 bytes per
-    * character — caching them is a corpus-sized copy at 100 TB); the
-    * exact-verify stage re-shingles just the estimate survivors
-    * instead ([[exactVerify]]). A multi-job production pipeline would
-    * stage this table to parquet once and join against it. */
-  /** Persisted (id, sig) table. `track = false` hands the cache
-    * lifecycle to the caller (the frame is NOT added to the global
-    * registry, so a concurrent `unpersistCaches` can't strip it and
-    * repeated per-run builds can't grow the registry unboundedly) —
-    * callers then own the unpersist (Pipeline's funnel release). */
+    * pipeline references signatures from three plan branches (bands
+    * ×1, estimate-prune ×2) — without materialization Catalyst
+    * recomputes the shingling per branch (six corpus re-shinglings in
+    * the round-1 q41 plan). Only the 512-byte signatures are cached,
+    * NOT the shingle arrays (~8 bytes per character — caching them is
+    * a corpus-sized copy at 100 TB); the exact-verify stage re-shingles
+    * just the estimate survivors instead ([[exactVerify]]). A
+    * multi-job production pipeline would stage this table to parquet
+    * once and join against it.
+    *
+    * `track = false` hands the cache lifecycle to the caller (the frame
+    * is NOT added to the global registry, so a concurrent
+    * `unpersistCaches` can't strip it and repeated per-run builds can't
+    * grow the registry unboundedly) — the caller then owns the
+    * unpersist. */
   def signatureTable(df: DataFrame, idCol: String,
       track: Boolean = true): DataFrame = {
     val sigs = minHashSignatures(df).select(col(idCol), col("sig"))
@@ -401,11 +407,12 @@ object Dedup extends SetSimJoins with SetSimIndexing
   // long-lived session composing many dedup runs releases them with
   // [[unpersistCaches]] once all in-flight results are materialized —
   // otherwise each distinct input corpus would pin its signature cache
-  // for the JVM lifetime. Runs needing per-call lifecycle build the
-  // signature table themselves and unpersist exactly that frame
-  // (nearDupPairs' sigsOpt; Pipeline.curateObserved does this), since
-  // this registry is JVM-global: draining it mid-flight would strip
-  // another concurrent run's cache.
+  // for the JVM lifetime. Runs needing per-call lifecycle pass their
+  // own (id, sig) frame through nearDupPairs' sigsOpt and unpersist
+  // exactly that frame (Pipeline.curateObserved computes the signature
+  // inside its own exact-dedup cache), since this registry is
+  // JVM-global: draining it mid-flight would strip another concurrent
+  // run's cache.
   private val cached =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
@@ -444,14 +451,13 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * estimate Jaccard (matching-minhash fraction) and prune; only the
     * survivors pay for the exact shingle-set Jaccard (shingled
     * post-join in exactVerify). The signature computation runs ONCE
-    * (signatureTable) — every band/estimate stage joins against the
-    * same materialized frame. */
+    * (signatureTable) — the band and estimate stages read the same
+    * materialized frame. */
   def nearDupPairs(df: DataFrame, idCol: String, minJaccard: Double,
       sigsOpt: Option[DataFrame] = None): DataFrame = {
-    // callers that need deterministic cache lifecycle
-    // (Pipeline.curateObserved) build the signature table themselves,
-    // pass it here, and unpersist exactly that frame once their
-    // results materialize
+    // `sigsOpt`: an (id, sig) frame the caller materialized and owns,
+    // e.g. a projection of a cache that already holds `df`'s signature
+    // (Pipeline.curateObserved), so no signature table is built here
     val sigs = sigsOpt.getOrElse(signatureTable(df, idCol))
     val estimated = estimatePrune(lshCandidatePairs(sigs, idCol),
       sigs, sigs, "doc_a", "doc_b", minJaccard)
@@ -676,41 +682,12 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * row instead of nested interpreted aggregate/zip_with lambdas. */
   def simhashExpr(textCol: String): Column = simhash64(col(textCol))
 
-  /** The interpreted higher-order-function form of the same SimHash —
-    * kept as the differential-test reference for SimHash64. */
-  def simhashExprInterpreted(textCol: String): Column =
-    simhashHof(textCol, xxhash64(_))
-
-  /** Deterministic SimHash: identical semantics to [[simhashExpr]] but
-    * with the FNV+splitmix token hash (`rolling_hash`) in place of
-    * xxhash64 — the one piece of the SimHash pipeline DuckDB cannot
-    * replay. This sibling turns the SimHash *capability* into a full
-    * hash-checked oracle row (q83), the q71-for-q46 move; the xxhash64
-    * form stays the production default (built-in, codegen'd). */
-  def simhashDetExpr(textCol: String): Column =
-    simhashHof(textCol, rollingHash)
-
-  /** SimHash as interpreted HOF lambdas over `tokenHash` of each space
-    * token: per bit position, +1/-1 votes summed over tokens, then the
-    * bits whose sum is >= 0. The inner zip_with lambda reads the outer
-    * aggregate lambda's token hash `h`. */
-  private def simhashHof(textCol: String, tokenHash: Column => Column): Column = {
-    val bits = sequence(lit(0), lit(63))
-    val counts = aggregate(transform(split(col(textCol), " "), tokenHash),
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bits, (a, i) =>
-        a + when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1,
-          lit(1)).otherwise(lit(-1))))
-    aggregate(
-      zip_with(counts, bits, (c, i) =>
-        when(c >= 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
   /** Query entry: deterministic SimHash + 16-bit band split per doc.
-    * Uses the native codegen expression (simhash64_fnv); the
-    * interpreted [[simhashDetExpr]] is its differential reference,
-    * exactly the xxhash64 pair's arrangement. */
+    * Uses the native codegen expression (simhash64_fnv): the xxhash64
+    * SimHash with the FNV+splitmix token hash (`rolling_hash`) in place
+    * of xxhash64 — the one piece of the SimHash pipeline DuckDB cannot
+    * replay — so the SimHash capability is a hash-checked oracle row
+    * (q83); the xxhash64 form stays the production default. */
   def simhashDetFingerprints(spark: SparkSession, dir: String): DataFrame = {
     val withSim = Tables.documents(spark, dir)
       .select(col("doc_id"), simhash64Fnv(col("text")).as("simhash_det"))

@@ -26,12 +26,6 @@ object Similarity {
     * (same cast + summation order). */
   def dot(a: Column, b: Column): Column = dotf(a, b)
 
-  /** The interpreted higher-order-function form — kept as the
-    * differential-test reference for DotProductF. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 

@@ -14,7 +14,7 @@ class AnalyticsSpec extends SparkSpec {
       "the quick brown fox jumps over the lazy dog")
     val got = samples.toDF("s")
       .select(expr("rolling_hash(s)")).collect().map(_.getLong(0))
-    val want = samples.map(GraftFunctions.rollingHash64Reference)
+    val want = samples.map(References.rollingHash64)
     assert(got.toSeq == want)
   }
 
@@ -25,7 +25,7 @@ class AnalyticsSpec extends SparkSpec {
     new graft.functions.GraftExtensions()
       .apply(new org.apache.spark.sql.SparkSessionExtensions)
     val h = graft.functions.RollingHash64(Literal("abc")).eval(null)
-    assert(h == GraftFunctions.rollingHash64Reference("abc"))
+    assert(h == References.rollingHash64("abc"))
     val sh = graft.functions.ShingleHashes(Literal("abcdefghij"), 8).eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     assert(sh.numElements() == 3)
@@ -41,7 +41,7 @@ class AnalyticsSpec extends SparkSpec {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val got = Seq("abc", "xyzzy").toDF("s")
         .select(expr("rolling_hash(s)")).collect().map(_.getLong(0))
-      assert(got.toSeq == Seq("abc", "xyzzy").map(GraftFunctions.rollingHash64Reference))
+      assert(got.toSeq == Seq("abc", "xyzzy").map(References.rollingHash64))
     }
   }
 
@@ -177,14 +177,14 @@ class AnalyticsSpec extends SparkSpec {
       "héllo wörld ⚡ tokens", Array.tabulate(80)(i => s"t$i").mkString(" "))
     val df = samples.toDF("text")
     val got = df.select(Dedup.simhashExpr("text")).collect().map(_.getLong(0))
-    val want = df.select(Dedup.simhashExprInterpreted("text"))
+    val want = df.select(References.simhash("text"))
       .collect().map(_.getLong(0))
     assert(got.toSeq == want.toSeq)
     // corpus-wide agreement on real documents
     val docs = Tables.documents(spark, sf)
     val mismatches = docs.select(
         Dedup.simhashExpr("text").as("native"),
-        Dedup.simhashExprInterpreted("text").as("interp"))
+        References.simhash("text").as("interp"))
       .filter(col("native") =!= col("interp")).count()
     assert(mismatches == 0)
   }
@@ -197,9 +197,9 @@ class AnalyticsSpec extends SparkSpec {
     val planeCol = array(plane.map(lit): _*)
     val mismatches = emb.select(
         graft.ops.Similarity.dot(col("embedding"), col("embedding")).as("n_ff"),
-        graft.ops.Similarity.dotHof(col("embedding"), col("embedding")).as("h_ff"),
+        References.dotHof(col("embedding"), col("embedding")).as("h_ff"),
         graft.ops.Similarity.dot(col("embedding"), planeCol).as("n_fd"),
-        graft.ops.Similarity.dotHof(col("embedding"), planeCol).as("h_fd"))
+        References.dotHof(col("embedding"), planeCol).as("h_fd"))
       .filter(col("n_ff") =!= col("h_ff") || col("n_fd") =!= col("h_fd"))
       .count()
     assert(mismatches == 0, "native dotf differs from HOF form")

@@ -363,7 +363,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("deterministic simhash keeps the locality property: small edit = small hamming") {
-    import graft.ops.Dedup
     graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today again"),
@@ -371,7 +370,7 @@ class OpsSpec extends SparkSpec {
       (3L, "entirely different content with no shared tokens at all"))
       .toDF("doc_id", "text")
     val sims = docs.select(col("doc_id"),
-        Dedup.simhashDetExpr("text").as("s"))
+        References.simhashDet("text").as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the native codegen form (what q83 runs) must equal the
     // interpreted HOF reference bit-for-bit, incl. empty-token edges
@@ -379,7 +378,7 @@ class OpsSpec extends SparkSpec {
       Seq((10L, ""), (11L, " double  space ")).toDF("doc_id", "text"))
     val diff = edgeDocs.select(
         expr("simhash64_fnv(text)").as("native"),
-        Dedup.simhashDetExpr("text").as("interp"))
+        References.simhashDet("text").as("interp"))
       .collect()
     diff.foreach(r => assert(r.getLong(0) == r.getLong(1),
       s"native ${r.getLong(0)} != interpreted ${r.getLong(1)}"))
@@ -389,7 +388,7 @@ class OpsSpec extends SparkSpec {
     assert(near < far, s"locality violated: near=$near far=$far")
     assert(near <= 16, s"one-token edit moved $near bits")
     // determinism: recomputation is bit-identical
-    val again = docs.select(Dedup.simhashDetExpr("text"))
+    val again = docs.select(References.simhashDet("text"))
       .collect().map(_.getLong(0)).toSet
     assert(again == sims.values.toSet)
   }

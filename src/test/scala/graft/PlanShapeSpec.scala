@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.MinHashSignature
 import graft.ops.{Dedup, Relational, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
@@ -52,23 +53,60 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val df = Dedup.nearDupPairs(Tables.documents(spark, sf), "doc_id", 0.8)
     df.collect()
-    // banding + estimate branches read the cached (id, sig) table —
-    // the expensive shingling runs exactly once, inside the cache
-    // build; the only direct file scans are the two exact-verify text
-    // joins (shingled post-join, survivors only). Walk the executed
-    // plan, descending into AQE stages but not the cached relation.
+    // the bucket aggregate and the estimate's two joins read the cached
+    // (id, sig) table — the expensive shingling runs exactly once,
+    // inside the cache build; the only direct file scans are the two
+    // exact-verify text joins (shingled post-join, survivors only).
+    // Walk the executed plan, descending into AQE stages but not the
+    // cached relation.
     var cacheScans = 0
     var fileScans = 0
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case _: InMemoryTableScanExec => cacheScans += 1
-      case q: QueryStageExec => walk(q.plan)
-      case f: FileSourceScanExec => fileScans += 1
-      case other => other.children.foreach(walk)
+    var sigEvals = 0
+    def walk(p: SparkPlan): Unit = {
+      sigEvals += p.expressions.count(_.exists(_.isInstanceOf[MinHashSignature]))
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case _: InMemoryTableScanExec => cacheScans += 1
+        case q: QueryStageExec => walk(q.plan)
+        case f: FileSourceScanExec => fileScans += 1
+        case other => other.children.foreach(walk)
+      }
     }
     walk(df.queryExecution.executedPlan)
     assert(fileScans <= 2, s"$fileScans file scans — signature work not shared")
-    assert(cacheScans >= 4, s"only $cacheScans cache scans — signature table not reused")
+    assert(cacheScans == 3,
+      s"$cacheScans cache scans — expected bands once and estimate twice")
+    assert(sigEvals == 0,
+      s"$sigEvals plan nodes outside the cache compute a MinHash signature")
+  }
+
+  test("curation computes MinHash signatures inside the exact-dedup cache") {
+    // the exact-dedup cache also holds each row's signature, so the
+    // curated plan holds ONE cached relation (a separate signature
+    // table would be a second, built over the first), and the bucket
+    // aggregate pairs candidates without a Window
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val oc = Pipeline.curateObserved(Tables.documents(spark, sf))
+    try {
+      oc.curated.collect()
+      val relations = scala.collection.mutable.Set[Int]()
+      var windows = 0
+      def walk(p: SparkPlan): Unit = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case s: InMemoryTableScanExec =>
+          if (relations.add(System.identityHashCode(s.relation.cacheBuilder)))
+            walk(s.relation.cachedPlan)
+        case w: WindowExec => windows += 1; w.children.foreach(walk)
+        case other => other.children.foreach(walk)
+      }
+      walk(oc.curated.queryExecution.executedPlan)
+      assert(relations.size == 1, s"${relations.size} cached relations")
+      assert(windows == 0, s"$windows Window operators in the curated plan")
+    } finally oc.release()
   }
 
   test("q126 verify stage is size-conditional: broadcast small, shuffled-hash large") {

@@ -1,0 +1,82 @@
+package graft
+
+import graft.functions.BpeMergeTable
+import graft.functions.GraftFunctions.rollingHash
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+/** Plain-Scala and interpreted higher-order-function references that
+  * the differential specs compare the native expressions against. */
+object References {
+
+  /** FNV-1a over the UTF-8 bytes: the `rolling_hash` reference. */
+  def rollingHash64(s: String): Long = {
+    val bytes = s.getBytes("UTF-8")
+    var h = 0xcbf29ce484222325L
+    var i = 0
+    while (i < bytes.length) {
+      h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L
+      i += 1
+    }
+    h
+  }
+
+  /** Sequential BPE: apply each merge rule of `t`, in rank order, as
+    * one left-to-right pass over the word's code points. */
+  def bpeEncode(t: BpeMergeTable, w: String): Seq[String] = {
+    var toks = w.codePoints().toArray.toSeq
+      .map(cp => new String(Character.toChars(cp)))
+    t.pairs.foreach { case (a, b) =>
+      val out = scala.collection.mutable.ArrayBuffer[String]()
+      toks.foreach { x =>
+        if (out.nonEmpty && out.last == a && x == b)
+          out(out.length - 1) = a + b
+        else out += x
+      }
+      toks = out.toSeq
+    }
+    toks
+  }
+
+  /** Delta-varint packing of a sorted id set (`VarintGramSet`). */
+  def varintPack(xs: Seq[Long]): Array[Byte] = {
+    val out = scala.collection.mutable.ArrayBuffer[Byte]()
+    var prev = 0L
+    xs.foreach { x =>
+      var v = x - prev
+      prev = x
+      while ((v & ~0x7fL) != 0L) { out += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
+      out += v.toByte
+    }
+    out.toArray
+  }
+
+  /** dot(a, b) in double precision as zip_with/aggregate lambdas
+    * (`DotProductF`). */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** SimHash with the xxhash64 token hash (`simhash64`). */
+  def simhash(textCol: String): Column = simhashHof(textCol, xxhash64(_))
+
+  /** SimHash with the FNV+splitmix token hash (`simhash64_fnv`). */
+  def simhashDet(textCol: String): Column = simhashHof(textCol, rollingHash)
+
+  /** SimHash as interpreted HOF lambdas over `tokenHash` of each space
+    * token: per bit position, +1/-1 votes summed over tokens, then the
+    * bits whose sum is >= 0. The inner zip_with lambda reads the outer
+    * aggregate lambda's token hash `h`. */
+  private def simhashHof(textCol: String, tokenHash: Column => Column): Column = {
+    val bits = sequence(lit(0), lit(63))
+    val counts = aggregate(transform(split(col(textCol), " "), tokenHash),
+      array_repeat(lit(0L), 64),
+      (acc, h) => zip_with(acc, bits, (a, i) =>
+        a + when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1,
+          lit(1)).otherwise(lit(-1))))
+    aggregate(
+      zip_with(counts, bits, (c, i) =>
+        when(c >= 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
+      lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
+}

@@ -154,7 +154,7 @@ class Round12OpsSpec extends SparkSpec {
         .distinct.sorted
       val expect = a.toSet.intersect(b.toSet).size.toLong
       val got = VarintGramSet.intersectCount(
-        VarintGramSet.packReference(a), VarintGramSet.packReference(b))
+        References.varintPack(a), References.varintPack(b))
       assert(got == expect, s"a=$a b=$b got=$got expect=$expect")
     }
     // the Expression path (pack in Spark, intersect in Spark) agrees

@@ -90,8 +90,8 @@ class Round13OpsSpec extends SparkSpec {
         (row.getString(0), row.getSeq[String](1), row.getSeq[String](2))
       assert(nat == fold, s"native diverged on '$w': $nat vs $fold")
       assert(nat.mkString("") == w, s"lossless violated on '$w': $nat")
-      val ref = graft.functions.BpeMergeTable(merges.toArray)
-        .encodeReference(w)
+      val ref = References.bpeEncode(
+        graft.functions.BpeMergeTable(merges.toArray), w)
       assert(nat == ref, s"reference diverged on '$w': $nat vs $ref")
     }
   }

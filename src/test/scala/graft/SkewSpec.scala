@@ -105,6 +105,42 @@ class SkewSpec extends SparkSpec {
     assert(flat.contains((5000L, 5001L)))
     assert(!flat.exists(p => p._1 == 6000L || p._2 == 6000L))
   }
+
+  test("LSH bucket pairs equal a brute-force pairing of the band buckets") {
+    import graft.ops.Dedup
+    // planted signatures: docs 3, 1, 2 and a NULL id share band 0 (a
+    // bucket of exactly maxBucket non-NULL ids), docs 11-14 share band
+    // 1 (one over the cap: star from 11), docs 2 and 12 share band 2;
+    // every other signature value is unique to its doc
+    def sig(id: Long, shared: Map[Int, Long]): Seq[Long] =
+      (0 until Dedup.NumHashes).map { k =>
+        shared.getOrElse(k / Dedup.RowsPerBand, id * 1000L + k)
+      }
+    val planted: Seq[(Option[Long], Seq[Long])] =
+      Seq(3L, 1L, 2L).map(i => Some(i) -> sig(i,
+          Map(0 -> 7L) ++ (if (i == 2L) Map(2 -> 8L) else Map.empty))) ++
+        Seq(11L, 12L, 13L, 14L).map(i => Some(i) -> sig(i,
+          Map(1 -> 9L) ++ (if (i == 12L) Map(2 -> 8L) else Map.empty))) ++
+        Seq(None -> sig(999L, Map(0 -> 7L)), Some(20L) -> sig(20L, Map.empty))
+    val sigs = planted.toDF("doc_id", "sig")
+    val maxBucket = 3
+    val want = Dedup.bandedIds(sigs, "id").collect()
+      .filterNot(_.isNullAt(0))
+      .groupBy(r => (r.get(1), r.get(2))).values
+      .map(_.map(_.getLong(0)).sorted.toSeq)
+      .flatMap { ids =>
+        if (ids.size <= maxBucket)
+          for (i <- ids.indices; j <- i + 1 until ids.size) yield ids(i) -> ids(j)
+        else ids.tail.map(ids.head -> _)
+      }.toSet
+    assert(want == Set(1L -> 2L, 1L -> 3L, 2L -> 3L,
+      11L -> 12L, 11L -> 13L, 11L -> 14L, 2L -> 12L))
+    val got = Dedup.lshCandidatePairs(sigs, "doc_id", maxBucket).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got.size == got.toSet.size, s"repeated pairs: $got")
+    assert(got.toSet == want)
+    assert(got.forall { case (a, b) => a < b }, s"self or reversed pair: $got")
+  }
   test("join-skew report ranks a planted hot key first with exact fanout") {
     import org.apache.spark.sql.functions._
     // key 7 has 50 left x 3 right = 150 fanout; key 1 has 2 x 1 = 2
