@@ -183,18 +183,15 @@ object Transfer {
     * the output write, and a small update batch broadcasts.
     *
     * Like SQL MERGE, the updates must be key-unique — duplicates would
-    * silently fan out matched target rows, so `validate=true`
-    * (default) fails fast with one aggregation over the (small) update
-    * batch; pass false only for pre-deduplicated feeds. */
+    * silently fan out matched target rows, so the call fails fast with
+    * one aggregation over the (small) update batch. */
   def mergeUpsert(target: DataFrame, updates: DataFrame,
-      key: String, validate: Boolean = true): DataFrame = {
-    if (validate) {
-      val dup = updates.groupBy(col(key))
-        .count().filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"mergeUpsert: updates contain duplicate rows for key " +
-          s"${dup.head.get(0)} — MERGE requires key-unique updates")
-    }
+      key: String): DataFrame = {
+    val dup = updates.groupBy(col(key))
+      .count().filter(col("count") > 1).limit(1).collect()
+    require(dup.isEmpty,
+      s"mergeUpsert: updates contain duplicate rows for key " +
+        s"${dup.head.get(0)} — MERGE requires key-unique updates")
     val dataCols = target.columns.filterNot(_ == key)
     val u = dataCols.foldLeft(updates) { (df, c) =>
       df.withColumnRenamed(c, s"__u_$c")
@@ -264,20 +261,18 @@ object Transfer {
     * the (small) current slice and the update batch; the closed
     * history is a union pass-through that never shuffles. */
   def scd2Apply(history: DataFrame, updates: DataFrame, key: String,
-      ts: String, attrs: Seq[String], validate: Boolean = true): DataFrame = {
-    if (validate) {
-      // one aggregation job catches both invariants (NULL keys group
-      // together, so they surface as a "key" row like any duplicate)
-      val bad = updates.groupBy(col(key)).count()
-        .filter(col("count") > 1 || col(key).isNull).limit(1).collect()
-      bad.headOption.foreach { r =>
-        require(!r.isNullAt(0),
-          s"scd2Apply: updates contain a NULL $key — SCD-2 requires " +
-            "non-null keys (a NULL key cannot match its own current row)")
-        require(false,
-          s"scd2Apply: updates contain duplicate rows for key " +
-            s"${r.get(0)} — SCD-2 merge requires key-unique updates")
-      }
+      ts: String, attrs: Seq[String]): DataFrame = {
+    // one aggregation job catches both invariants (NULL keys group
+    // together, so they surface as a "key" row like any duplicate)
+    val bad = updates.groupBy(col(key)).count()
+      .filter(col("count") > 1 || col(key).isNull).limit(1).collect()
+    bad.headOption.foreach { r =>
+      require(!r.isNullAt(0),
+        s"scd2Apply: updates contain a NULL $key — SCD-2 requires " +
+          "non-null keys (a NULL key cannot match its own current row)")
+      require(false,
+        s"scd2Apply: updates contain duplicate rows for key " +
+          s"${r.get(0)} — SCD-2 merge requires key-unique updates")
     }
     val validToType = history.schema("valid_to").dataType
     val closed = history.filter(!col("is_current"))

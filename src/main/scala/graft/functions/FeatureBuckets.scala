@@ -50,9 +50,6 @@ case class FeatureBuckets(child: Expression, buckets: Int)
 }
 
 object FeatureBuckets {
-  private final val Basis = 0xcbf29ce484222325L
-  private final val Prime = 1099511628211L
-
   /** Static so generated code calls one tight JIT-friendly loop. */
   def compute(bytes: Array[Byte], buckets: Int): Array[Long] = {
     val mask = (buckets - 1).toLong
@@ -64,7 +61,7 @@ object FeatureBuckets {
     val uni = new Array[Long](nTok) // full unigram FNV states
     val starts = new Array[Int](nTok + 1)
     var t = 0
-    var h = Basis
+    var h = Hash64.FnvOffset
     starts(0) = 0
     i = 0
     while (i < bytes.length) {
@@ -74,9 +71,9 @@ object FeatureBuckets {
         out(t) = h & mask
         t += 1
         starts(t) = i + 1
-        h = Basis
+        h = Hash64.FnvOffset
       } else {
-        h = (h ^ (b & 0xffL)) * Prime
+        h = Hash64.fnvStep(h, b)
       }
       i += 1
     }
@@ -86,11 +83,11 @@ object FeatureBuckets {
     // bigrams: continue tok_i's state through ' ' and tok_{i+1} bytes
     var g = 0
     while (g < nTok - 1) {
-      var bh = (uni(g) ^ (' ' & 0xffL)) * Prime
+      var bh = Hash64.fnvStep(uni(g), ' '.toByte)
       var p = starts(g + 1)
       val end = starts(g + 2) - 1
       while (p < end) {
-        bh = (bh ^ (bytes(p) & 0xffL)) * Prime
+        bh = Hash64.fnvStep(bh, bytes(p))
         p += 1
       }
       out(nTok + g) = bh & mask

@@ -39,7 +39,7 @@ object GraftFunctions {
     col(PackedShingles(ex(s), 8, stride = 4, distinct = false))
   /** 64-bit SimHash over space tokens. */
   def simhash64(s: Column): Column = col(SimHash64(ex(s)))
-  /** 64-bit SimHash with the replayable FNV+splitmix token hash. */
+  /** 64-bit SimHash with the replayable FNV-1a token hash. */
   def simhash64Fnv(s: Column): Column = col(SimHash64(ex(s), fnv = true))
   /** Double-precision dot product of two arrays. */
   def dotf(a: Column, b: Column): Column = col(DotProductF(ex(a), ex(b)))
@@ -125,12 +125,4 @@ object GraftFunctions {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "internal")
     }
-
-  /** Plain-Scala splitmix64 reference for differential testing. */
-  def splitmix64Reference(h0: Long): Long = {
-    var h = h0
-    h = (h ^ (h >>> 30)) * java.lang.Long.parseUnsignedLong("bf58476d1ce4e5b9", 16)
-    h = (h ^ (h >>> 27)) * java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
-    h ^ (h >>> 31)
-  }
 }

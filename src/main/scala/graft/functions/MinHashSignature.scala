@@ -26,47 +26,13 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   private lazy val seeds: Array[Long] = MinHashSignature.seeds(numHashes)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val x = arr.getLong(i)
-      var j = 0
-      while (j < numHashes) {
-        val z = MinHashSignature.mix(x ^ seeds(j))
-        if (z < sig(j)) sig(j) = z
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], seeds)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val seedsRef = ctx.addReferenceObj("seeds", seeds, "long[]")
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val x = ctx.freshName("x")
-      val z = ctx.freshName("z")
-      s"""
-         |long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $c.numElements(); $i++) {
-         |  long $x = $c.getLong($i);
-         |  for (int $j = 0; $j < $numHashes; $j++) {
-         |    long $z = $x ^ $seedsRef[$j];
-         |    $z = ($z ^ ($z >>> 30)) * 0xbf58476d1ce4e5b9L;
-         |    $z = ($z ^ ($z >>> 27)) * 0x94d049bb133111ebL;
-         |    $z = $z ^ ($z >>> 31);
-         |    if ($z < $sig[$j]) $sig[$j] = $z;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
+      s"${ev.value} = graft.functions.MinHashSignature.signature($c, $seedsRef);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -74,26 +40,29 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 }
 
 object MinHashSignature {
-  /** splitmix64 finalizer — full avalanche, 5 ALU ops. */
-  def mix(v: Long): Long = {
-    var z = v
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   /** Deterministic per-hash-function seeds. */
   def seeds(n: Int): Array[Long] =
-    Array.tabulate(n)(j => mix(0x9e3779b97f4a7c15L * (j + 1)))
+    Array.tabulate(n)(j => Hash64.splitmix64(0x9e3779b97f4a7c15L * (j + 1)))
 
-  /** Plain-Scala reference for differential tests. */
-  def reference(shingles: Array[Long], numHashes: Int): Array[Long] = {
-    val s = seeds(numHashes)
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    for (x <- shingles; j <- 0 until numHashes) {
-      val z = mix(x ^ s(j))
-      if (z < sig(j)) sig(j) = z
+  /** Per seed, the minimum of `splitmix64(x ^ seed)` over the shingles.
+    * Static so generated code can call it: a tight JIT-friendly loop
+    * beats inlined codegen and keeps the generated method small. */
+  def signature(shingles: ArrayData, seeds: Array[Long]): GenericArrayData = {
+    val k = seeds.length
+    val sig = new Array[Long](k)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    val n = shingles.numElements()
+    var i = 0
+    while (i < n) {
+      val x = shingles.getLong(i)
+      var j = 0
+      while (j < k) {
+        val z = Hash64.splitmix64(x ^ seeds(j))
+        if (z < sig(j)) sig(j) = z
+        j += 1
+      }
+      i += 1
     }
-    sig
+    new GenericArrayData(sig)
   }
 }

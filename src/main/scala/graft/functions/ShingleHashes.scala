@@ -99,6 +99,11 @@ object ShingleHashes {
     }
     java.util.Arrays.copyOf(out, m)
   }
+  /** FNV-1a then the splitmix finalizer over the k bytes from `i`
+    * (fewer at the end of a short text). */
+  private def windowHash(bytes: Array[Byte], i: Int, k: Int): Long =
+    Hash64.splitmix64(Hash64.fnv1a(bytes, i, math.min(i + k, bytes.length)))
+
   /** All k-byte window hashes (FNV-1a then splitmix finalizer) in
     * POSITIONAL order (no dedup) — the input shape winnowing needs.
     * Static so generated code can call it: a tight JIT-friendly loop
@@ -108,14 +113,7 @@ object ShingleHashes {
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      var h = 0xcbf29ce484222325L
-      val end = math.min(i + k, bytes.length)
-      var p = i
-      while (p < end) {
-        h = (h ^ (bytes(p) & 0xffL)) * 1099511628211L
-        p += 1
-      }
-      out(i) = MinHashSignature.mix(h)
+      out(i) = windowHash(bytes, i, k)
       i += 1
     }
     out
@@ -130,14 +128,7 @@ object ShingleHashes {
     var m = 0
     var i = 0
     while (i < n) {
-      var h = 0xcbf29ce484222325L
-      val end = math.min(i + k, bytes.length)
-      var p = i
-      while (p < end) {
-        h = (h ^ (bytes(p) & 0xffL)) * 1099511628211L
-        p += 1
-      }
-      h = MinHashSignature.mix(h)
+      val h = windowHash(bytes, i, k)
       if (seen.add(h)) { out(m) = h; m += 1 }
       i += 1
     }

@@ -41,18 +41,6 @@ case class SimHash64(child: Expression, fnv: Boolean = false)
 
 object SimHash64 {
 
-  /** Plain FNV-1a over a byte slice — the token hash of the
-    * oracle-replayable variant (matches RollingHash64 per token). */
-  private def fnvHash(bytes: Array[Byte], from: Int, until: Int): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = from
-    while (i < until) {
-      h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L
-      i += 1
-    }
-    h
-  }
-
   /** Static so generated code can call it: a tight JIT-friendly loop
     * beats inlined codegen and keeps the generated method small.
     * `fnv = true` swaps the token hash to FNV-1a (the DuckDB-replayable
@@ -65,7 +53,7 @@ object SimHash64 {
     while (i <= n) {
       if (i == n || bytes(i) == 0x20) {
         val h =
-          if (fnv) fnvHash(bytes, start, i)
+          if (fnv) Hash64.fnv1a(bytes, start, i)
           else XXH64.hashUnsafeBytes(
             bytes, Platform.BYTE_ARRAY_OFFSET + start, i - start, 42L)
         var b = 0

@@ -11,34 +11,20 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * distinct sketch (q84) was measured 50%+ high without this. A native
   * Expression rather than Column arithmetic because the finalizer's
   * multiplies must WRAP mod 2^64: under ANSI mode (Spark 4 default) a
-  * LongType `*` overflow throws, while Java's `*` in generated code
-  * wraps exactly as the DuckDB oracle's mod-2^64 HUGEINT replay does
-  * (graft.ops.HashSql.mulmod64). Same constants as ShingleHashes'
-  * window-hash finalizer.
+  * LongType `*` overflow throws, while [[Hash64.splitmix64]] wraps
+  * exactly as the DuckDB oracle's mod-2^64 HUGEINT replay does
+  * (graft.ops.HashSql.mulmod64).
   */
 case class Splitmix64(child: Expression) extends UnaryExpression {
-
-  final val C1: Long = java.lang.Long.parseUnsignedLong("bf58476d1ce4e5b9", 16)
-  final val C2: Long = java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "splitmix64"
 
-  // delegates to the shared reference so interpreted eval, codegen,
-  // and the differential-test expectation cannot drift apart
   override def nullSafeEval(input: Any): Any =
-    GraftFunctions.splitmix64Reference(input.asInstanceOf[Long])
+    Hash64.splitmix64(input.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.freshName("h")
-      s"""
-         |long $h = $c;
-         |$h = ($h ^ ($h >>> 30)) * ${C1}L;
-         |$h = ($h ^ ($h >>> 27)) * ${C2}L;
-         |${ev.value} = $h ^ ($h >>> 31);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.Hash64.splitmix64($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

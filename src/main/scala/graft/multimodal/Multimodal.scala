@@ -2,6 +2,7 @@ package graft.multimodal
 
 import graft.Tables
 import graft.functions.GraftFunctions.hammingCount
+import graft.functions.Hash64
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,17 +20,6 @@ import org.apache.spark.sql.types._
   * features are extracted first, bytes dropped before any wide op.
   */
 object Multimodal {
-
-  /** Typed metadata carried alongside the opaque payload. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true))), nullable = true)))
 
   /** Synthetic media table: documents' text bytes standing in for an
     * encoded payload (deterministic; the driver testdata ships no
@@ -144,12 +134,9 @@ object Multimodal {
           val chunk = math.max(
             (if (payload == null) 0 else payload.length) / math.max(nFrames, 1), 1)
           (0 until nFrames by everyK).iterator.map { f =>
-            var h = 0xcbf29ce484222325L
-            if (payload != null) {
-              var i = f * chunk
-              val end = math.min(i + chunk, payload.length)
-              while (i < end) { h = (h ^ (payload(i) & 0xffL)) * 1099511628211L; i += 1 }
-            }
+            val h =
+              if (payload == null) Hash64.FnvOffset
+              else Hash64.fnv1a(payload, f * chunk, math.min(f * chunk + chunk, payload.length))
             Row(r.getAs[Long]("doc_id"), f, h)
           }
         }

@@ -284,7 +284,6 @@ object Dedup extends SetSimJoins with SetSimIndexing
   // near-dups at J≈0.79 to ~70% recall.
   val Bands = 16
   val RowsPerBand: Int = NumHashes / Bands
-  val ShingleLen = 8
 
   /** Distinct 8-byte shingle hashes per document (native codegen
     * expression — see graft.functions.ShingleHashes). */
@@ -684,7 +683,7 @@ object Dedup extends SetSimJoins with SetSimIndexing
 
   /** Query entry: deterministic SimHash + 16-bit band split per doc.
     * Uses the native codegen expression (simhash64_fnv): the xxhash64
-    * SimHash with the FNV+splitmix token hash (`rolling_hash`) in place
+    * SimHash with the FNV-1a token hash (`rolling_hash`) in place
     * of xxhash64 — the one piece of the SimHash pipeline DuckDB cannot
     * replay — so the SimHash capability is a hash-checked oracle row
     * (q83); the xxhash64 form stays the production default. */

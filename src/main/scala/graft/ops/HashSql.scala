@@ -1,8 +1,8 @@
 package graft.ops
 
 /** DuckDB SQL generators that REPLAY the engine's hash primitives
-  * (graft.functions.ShingleHashes / RollingHash64: FNV-1a over UTF-8
-  * bytes + the splitmix64 finalizer) in pure SQL, so the hash-based
+  * (graft.functions.Hash64: FNV-1a over UTF-8 bytes + the splitmix64
+  * finalizer, with Hash64's constants) in pure SQL, so the hash-based
   * query family (fingerprints, winnowing, decontamination) gets full
   * ground-truth oracles instead of oracle exemptions.
   *
@@ -23,12 +23,16 @@ package graft.ops
   *    hex(encode(..)) pair-parsing instead.
   */
 object HashSql {
+  import graft.functions.Hash64
+  import java.lang.Long.toUnsignedString
 
   private val M64 = "18446744073709551616" // 2^64
   private val Signed63 = "9223372036854775808" // 2^63
-  /** FNV-1a offset basis 0xcbf29ce484222325 as unsigned. */
-  private val FnvOffset = "14695981039346656037"
-  private val FnvPrime = "1099511628211"
+  // Hash64's constants, unsigned
+  private val FnvOffset = toUnsignedString(Hash64.FnvOffset)
+  private val FnvPrime = toUnsignedString(Hash64.FnvPrime)
+  private val MixC1 = BigInt(toUnsignedString(Hash64.MixC1))
+  private val MixC2 = BigInt(toUnsignedString(Hash64.MixC2))
 
   /** (x * c) mod 2^64 with INT128-safe 32-bit splitting. */
   def mulmod64(x: String, c: BigInt): String = {
@@ -43,6 +47,24 @@ object HashSql {
     s"""list_reduce(list_prepend($FnvOffset::HUGEINT, $byteList),
        |    (h, bb) -> (h - h%256 + xor(h%256, bb)) * $FnvPrime % $M64)""".stripMargin
 
+  /** splitmix64 ([[Hash64.splitmix64]]) replayed as five staged CTEs
+    * `<p>1`..`<p>5`, one shift-xor or multiply each, over the unsigned
+    * column `h` of CTE `from`, carrying `keys` through. With `list`,
+    * the column is the list `l`, each step maps over its elements and
+    * `<p>5` holds them unsigned; without, `<p>5` holds the value with
+    * its sign bit dropped (mod 2^63, Spark's `& Long.MaxValue`). */
+  private def splitmixCtes(p: String, from: String, keys: String,
+      list: Boolean = false): String = {
+    val steps = Seq(
+      "xor(h, h // 1073741824)", mulmod64("h", MixC1),
+      "xor(h, h // 134217728)", mulmod64("h", MixC2),
+      "xor(h, h // 2147483648)" + (if (list) "" else s" % $Signed63"))
+    steps.zipWithIndex.map { case (e, i) =>
+      val v = if (list) s"list_transform(l, h -> $e) AS l" else s"$e AS h"
+      s"$p${i + 1} AS (SELECT $keys, $v FROM ${if (i == 0) from else s"$p$i"})"
+    }.mkString(",\n")
+  }
+
   /** Unsigned HUGEINT -> signed BIGINT (two's-complement). */
   def toSigned(x: String): String =
     s"(CASE WHEN $x >= $Signed63 THEN $x - $M64 ELSE $x END)::BIGINT"
@@ -56,21 +78,14 @@ object HashSql {
     * the SIGNED 8-byte positional window hashes, exactly
     * ShingleHashes.windowHashes(bytes, 8) (FNV-1a + splitmix, one hash
     * per position, short texts hash as a single whole-text window). */
-  def windowHashCtes: String = {
-    val c1 = BigInt("bf58476d1ce4e5b9", 16)
-    val c2 = BigInt("94d049bb133111eb", 16)
+  def windowHashCtes: String =
     s"""b AS (SELECT doc_id, source,
        |       [ascii(substr(text, i, 1))::HUGEINT FOR i IN range(1, length(text)+1)] AS bl,
        |       length(text) AS n FROM documents),
        |w AS (SELECT doc_id, source, n, list_transform(range(1, greatest(n-7,1)+1), i ->
-       |        ${fnvReduce("bl[i:least(i+7, n)]")}) AS fh FROM b),
-       |m1 AS (SELECT doc_id, source, n, list_transform(fh, h -> xor(h, h // 1073741824)) AS l FROM w),
-       |m2 AS (SELECT doc_id, source, n, list_transform(l, h -> ${mulmod64("h", c1)}) AS l FROM m1),
-       |m3 AS (SELECT doc_id, source, n, list_transform(l, h -> xor(h, h // 134217728)) AS l FROM m2),
-       |m4 AS (SELECT doc_id, source, n, list_transform(l, h -> ${mulmod64("h", c2)}) AS l FROM m3),
-       |m5 AS (SELECT doc_id, source, n, list_transform(l, h -> xor(h, h // 2147483648)) AS l FROM m4),
+       |        ${fnvReduce("bl[i:least(i+7, n)]")}) AS l FROM b),
+       |${splitmixCtes("m", "w", "doc_id, source, n", list = true)},
        |whs AS (SELECT doc_id, source, n, list_transform(l, x -> ${toSigned("x")}) AS wh FROM m5)""".stripMargin
-  }
 
   /** Winnowing minima per doc: sliding-window-of-8 minima over `wh`
     * (signed comparison, matching ShingleHashes.winnow), positional —
@@ -152,7 +167,7 @@ object HashSql {
 
   /** q83: deterministic SimHash — the engine's SimHash semantics (per-
     * token 64-bit hash, ±1 bit balances, bit set when balance >= 0,
-    * 4×16-bit bands) with the replayable FNV+splitmix token hash in
+    * 4×16-bit bands) with the replayable FNV-1a token hash in
     * place of xxhash64. Bit tests and reassembly run as division by
     * power-of-two literals (HUGEINT `>>`/`<<` support is not assumed;
     * this is the same discipline as the splitmix shift emulation). */
@@ -224,8 +239,6 @@ object HashSql {
     * both sides (mod 2^63 here, `& Long.MaxValue` in Spark) so MIN
     * agrees between signed and unsigned representations. */
   def kmvSketchOracle(k: Int = Grouping.KmvK): String = {
-    val c1 = BigInt("bf58476d1ce4e5b9", 16)
-    val c2 = BigInt("94d049bb133111eb", 16)
     // the seed index j is a ROW dimension (not k generated columns):
     // the staged splitmix CTEs then touch one h column each, and the
     // exact HUGEINT sum over j-rows is order-independent
@@ -238,11 +251,7 @@ object HashSql {
        |f0 AS (SELECT event_type, day, j,
        |  ${fnvReduce("[ascii(substr(s, i, 1))::HUGEINT FOR i IN range(1, length(s)+1)]")} AS h
        |  FROM s0),
-       |f1 AS (SELECT event_type, day, j, xor(h, h // 1073741824) AS h FROM f0),
-       |f2 AS (SELECT event_type, day, j, ${mulmod64("h", c1)} AS h FROM f1),
-       |f3 AS (SELECT event_type, day, j, xor(h, h // 134217728) AS h FROM f2),
-       |f4 AS (SELECT event_type, day, j, ${mulmod64("h", c2)} AS h FROM f3),
-       |f5 AS (SELECT event_type, day, j, xor(h, h // 2147483648) % $Signed63 AS h FROM f4),
+       |${splitmixCtes("f", "f0", "event_type, day, j")},
        |daily AS (
        |  SELECT event_type, day, j, MIN(h) AS m FROM f5
        |  GROUP BY event_type, day, j
@@ -272,19 +281,12 @@ object HashSql {
   /** CTE chain replaying [[Sampling.groupSplit]]: yields `spb` with
     * (doc_id, gb) — the FNV+splitmix content bucket — shared by the
     * q89 oracle and the q194 leakage audit. */
-  def groupSplitCtes: String = {
-    val c1 = BigInt("bf58476d1ce4e5b9", 16)
-    val c2 = BigInt("94d049bb133111eb", 16)
+  def groupSplitCtes: String =
     s"""f0 AS (SELECT doc_id,
        |  ${fnvReduce("[ascii(substr(text, i, 1))::HUGEINT FOR i IN range(1, length(text)+1)]")} AS h
        |  FROM documents),
-       |f1 AS (SELECT doc_id, xor(h, h // 1073741824) AS h FROM f0),
-       |f2 AS (SELECT doc_id, ${mulmod64("h", c1)} AS h FROM f1),
-       |f3 AS (SELECT doc_id, xor(h, h // 134217728) AS h FROM f2),
-       |f4 AS (SELECT doc_id, ${mulmod64("h", c2)} AS h FROM f3),
-       |f5 AS (SELECT doc_id, xor(h, h // 2147483648) % $Signed63 AS h FROM f4),
+       |${splitmixCtes("f", "f0", "doc_id")},
        |spb AS (SELECT doc_id, h % 100 AS gb FROM f5)""".stripMargin
-  }
 
   /** The split-name CASE over `gb` (shared by both consumers). */
   def splitCase(trainPct: Int = 80, valPct: Int = 10): String =
@@ -334,21 +336,14 @@ object HashSql {
     * number), sign dropped (mod 2^63 == Spark's `& Long.MaxValue`),
     * mod-100 bucket mapped to split names. */
   def clusterSplitOracle(trainPct: Int = 80, valPct: Int = 10,
-      minCos: Double = 0.35): String = {
-    val c1 = BigInt("bf58476d1ce4e5b9", 16)
-    val c2 = BigInt("94d049bb133111eb", 16)
+      minCos: Double = 0.35): String =
     s"""WITH RECURSIVE ${Similarity.clusterOracleCtes(minCos)},
        |asg AS (
        |  SELECT e.vec_id, COALESCE(cl.cluster_id, e.vec_id) AS cluster_id
        |  FROM embeddings e LEFT JOIN cl ON e.vec_id = cl.vec_id
        |  WHERE e.vec_id < 200),
        |f0 AS (SELECT vec_id, cluster_id, cluster_id::HUGEINT AS h FROM asg),
-       |f1 AS (SELECT vec_id, cluster_id, xor(h, h // 1073741824) AS h FROM f0),
-       |f2 AS (SELECT vec_id, cluster_id, ${mulmod64("h", c1)} AS h FROM f1),
-       |f3 AS (SELECT vec_id, cluster_id, xor(h, h // 134217728) AS h FROM f2),
-       |f4 AS (SELECT vec_id, cluster_id, ${mulmod64("h", c2)} AS h FROM f3),
-       |f5 AS (SELECT vec_id, cluster_id,
-       |  xor(h, h // 2147483648) % $Signed63 AS h FROM f4),
+       |${splitmixCtes("f", "f0", "vec_id, cluster_id")},
        |b AS (SELECT vec_id, cluster_id, h % 100 AS gb FROM f5)
        |SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
        |  CAST(gb AS BIGINT) AS grp_bucket,
@@ -356,7 +351,6 @@ object HashSql {
        |       WHEN gb < ${trainPct + valPct} THEN 'val'
        |       ELSE 'test' END AS split
        |FROM b ORDER BY vec_id, cluster_id, grp_bucket, split""".stripMargin
-  }
 
   /** q146: replay [[Sampling.dsirAffinitySelect]] — FNV unigram+bigram
     * features into low-bit buckets (unsigned % B == Spark's signed

@@ -82,7 +82,10 @@ object PgCatalog {
     out.toSeq
   }
 
-  /** Full reflection of one table: columns + PK + FKs. */
+  /** Full reflection of one table: columns + PK + FKs. A foreign key's
+    * `refTable` is qualified with the referenced table's schema, so the
+    * phase-3 DDL resolves it whatever the connection's default schema,
+    * and its ON DELETE / ON UPDATE actions carry over. */
   def tableMeta(conn: Connection, schema: Option[String],
                 table: String): TableMeta = {
     val md: DatabaseMetaData = conn.getMetaData
@@ -110,24 +113,39 @@ object PgCatalog {
     while (prs.next()) pk += ((prs.getShort("KEY_SEQ"), prs.getString("COLUMN_NAME")))
     prs.close()
 
-    // group FK columns by constraint name, ordered by KEY_SEQ
-    val fkRows = ArrayBuffer.empty[(String, Short, String, String, String)]
+    // one single-column part per (FK, KEY_SEQ) row, merged by name
+    val fkParts = ArrayBuffer.empty[(Short, ForeignKey)]
     val frs = md.getImportedKeys(null, schema.orNull, table)
     while (frs.next()) {
-      fkRows += ((Option(frs.getString("FK_NAME")).getOrElse("fk_anon"),
-        frs.getShort("KEY_SEQ"), frs.getString("FKCOLUMN_NAME"),
-        frs.getString("PKTABLE_NAME"), frs.getString("PKCOLUMN_NAME")))
+      val refName = frs.getString("PKTABLE_NAME")
+      val refTable = Option(frs.getString("PKTABLE_SCHEM")).filter(_.nonEmpty)
+        .fold(refName)(s => s"$s.$refName")
+      fkParts += frs.getShort("KEY_SEQ") -> ForeignKey(
+        Option(frs.getString("FK_NAME")).getOrElse("fk_anon"),
+        Seq(frs.getString("FKCOLUMN_NAME")), refTable,
+        Seq(frs.getString("PKCOLUMN_NAME")),
+        fkAction(frs.getInt("DELETE_RULE")), fkAction(frs.getInt("UPDATE_RULE")))
     }
     frs.close()
-    val fks = fkRows.groupBy(_._1).toSeq.sortBy(_._1).map { case (name, rows) =>
-      val sorted = rows.sortBy(_._2)
-      ForeignKey(name, sorted.map(_._3).toSeq, sorted.head._4,
-        sorted.map(_._5).toSeq)
+    val fks = fkParts.groupBy(_._2.name).toSeq.sortBy(_._1).map { case (_, rows) =>
+      val parts = rows.sortBy(_._1).map(_._2)
+      parts.head.copy(columns = parts.flatMap(_.columns).toSeq,
+        refColumns = parts.flatMap(_.refColumns).toSeq)
     }
 
     TableMeta(schema, table, cols.toSeq,
       primaryKey = pk.sortBy(_._1).map(_._2).toSeq,
       foreignKeys = fks)
+  }
+
+  /** A JDBC referential action as its SQL words; NO ACTION, the SQL
+    * default, is None so default DDL carries no clause. */
+  private def fkAction(rule: Int): Option[String] = rule match {
+    case DatabaseMetaData.importedKeyCascade    => Some("CASCADE")
+    case DatabaseMetaData.importedKeySetNull    => Some("SET NULL")
+    case DatabaseMetaData.importedKeySetDefault => Some("SET DEFAULT")
+    case DatabaseMetaData.importedKeyRestrict   => Some("RESTRICT")
+    case _                                      => None
   }
 
   /** Reflect an entire schema (R1's `metadata.reflect` equivalent). */

@@ -97,8 +97,7 @@ object PgDdl {
   /** CREATE TABLE with PK/UNIQUE/CHECK but NO foreign keys (phase 1 of
     * the two-phase pass). `IF NOT EXISTS` mirrors the reference's
     * checkfirst=True idempotency (transfer_data_script.py:67). */
-  def createTable(t: TableMeta, ifNotExists: Boolean = true): String = {
-    val ine = if (ifNotExists) "IF NOT EXISTS " else ""
+  def createTable(t: TableMeta): String = {
     val cols = t.columns.map(columnDef)
     val pk =
       if (t.primaryKey.isEmpty) Nil
@@ -109,7 +108,7 @@ object PgDdl {
     val checks = t.checks.map(c =>
       s"CONSTRAINT ${quote(c.name)} CHECK (${c.expression})")
     val body = (cols ++ pk ++ uniques ++ checks).mkString(",\n  ")
-    s"CREATE TABLE $ine${qualified(t)} (\n  $body\n)"
+    s"CREATE TABLE IF NOT EXISTS ${qualified(t)} (\n  $body\n)"
   }
 
   /** Phase-3 FK statements (reference :153-161, quoted + ordered). */

@@ -37,11 +37,23 @@ class AnalyticsSpec extends SparkSpec {
 
   test("rolling_hash interpreted path (codegen off) agrees") {
     GraftFunctions.register(spark)
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      val got = Seq("abc", "xyzzy").toDF("s")
-        .select(expr("rolling_hash(s)")).collect().map(_.getLong(0))
-      assert(got.toSeq == Seq("abc", "xyzzy").map(References.rollingHash64))
+    val texts = Seq("", "abc", "xyzzy", "the quick brown fox jumps over the quick dog")
+    val want = texts.map { t =>
+      val h = References.rollingHash64(t)
+      (h, References.splitmix64(h), References.minhash64(References.shingle8(t)))
+    }
+    // repartition keeps the projection out of ConvertToLocalRelation,
+    // which would evaluate it interpreted even with codegen on
+    val df = texts.toDF("s").repartition(1)
+    Seq(("false", "NO_CODEGEN"), ("true", "CODEGEN_ONLY")).foreach {
+      case (wholeStage, factory) =>
+        withSQLConf("spark.sql.codegen.wholeStage" -> wholeStage,
+          "spark.sql.codegen.factoryMode" -> factory) {
+          val got = df.select(expr("rolling_hash(s)"),
+              expr("splitmix64(rolling_hash(s))"), expr("minhash64(shingle8(s))"))
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+          assert(got.toSeq == want, s"codegen factory mode $factory")
+        }
     }
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * named queries (all queries if none given) and re-times each query
   * twice so warm-cache cost is visible separately from first-run cost.
   *
-  *   sbt "runMain graft.Explain q00_flagship q11_join_theta"
+  *   sbt "Test/runMain graft.Explain q00_flagship q11_join_theta"
   */
 object Explain {
   def main(args: Array[String]): Unit = {

@@ -349,8 +349,7 @@ class OpsSpec extends SparkSpec {
     val probe = Seq(0L, 1L, -1L, 42L, Long.MaxValue, Long.MinValue).toDF("x")
       .selectExpr("x", "splitmix64(x) AS s").collect()
     probe.foreach { r =>
-      assert(r.getLong(1) ==
-        graft.functions.GraftFunctions.splitmix64Reference(r.getLong(0)))
+      assert(r.getLong(1) == References.splitmix64(r.getLong(0)))
     }
     val rows = Grouping.kmvSketchRollup(spark, sf).collect()
     assert(rows.nonEmpty)

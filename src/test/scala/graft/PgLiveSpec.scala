@@ -149,7 +149,8 @@ class PgLiveSpec extends SparkSpec {
       exec(conn, PgDdl.createTable(clone))
       PgDdl.addForeignKeys(clone).foreach(exec(conn, _))
       val back = PgCatalog.tableMeta(conn, Some("public"), "graft_live_child2")
-      assert(back.foreignKeys.map(_.refTable).contains("graft_live_parent"))
+      assert(back.foreignKeys.map(fk => (fk.refTable, fk.onDelete)) ==
+        Seq(("public.graft_live_parent", Some("CASCADE"))))
       exec(conn,
         "DROP TABLE graft_live_child2", "DROP TABLE graft_live_child",
         "DROP TABLE graft_live_parent")

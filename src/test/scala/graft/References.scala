@@ -10,15 +10,31 @@ import org.apache.spark.sql.functions._
 object References {
 
   /** FNV-1a over the UTF-8 bytes: the `rolling_hash` reference. */
-  def rollingHash64(s: String): Long = {
-    val bytes = s.getBytes("UTF-8")
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L
-      i += 1
-    }
-    h
+  def rollingHash64(s: String): Long = fnv1a(s.getBytes("UTF-8"))
+
+  private def fnv1a(bytes: Seq[Byte]): Long =
+    bytes.foldLeft(0xcbf29ce484222325L)((h, b) => (h ^ (b & 0xffL)) * 1099511628211L)
+
+  /** The splitmix64 finalizer: the `splitmix64` reference. */
+  def splitmix64(h0: Long): Long = {
+    var h = h0
+    h = (h ^ (h >>> 30)) * java.lang.Long.parseUnsignedLong("bf58476d1ce4e5b9", 16)
+    h = (h ^ (h >>> 27)) * java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
+    h ^ (h >>> 31)
+  }
+
+  /** Distinct finalized FNV-1a hashes of the 8-byte windows, first
+    * occurrence first; a shorter text is one window (`shingle8`). */
+  def shingle8(s: String): Seq[Long] = {
+    val b = s.getBytes("UTF-8").toSeq
+    (0 until math.max(b.length - 7, 1))
+      .map(i => splitmix64(fnv1a(b.slice(i, i + 8)))).distinct
+  }
+
+  /** 64-function MinHash signature of a shingle set (`minhash64`). */
+  def minhash64(shingles: Seq[Long]): Seq[Long] = (1 to 64).map { j =>
+    val seed = splitmix64(0x9e3779b97f4a7c15L * j)
+    shingles.map(x => splitmix64(x ^ seed)).foldLeft(Long.MaxValue)(math.min)
   }
 
   /** Sequential BPE: apply each merge rule of `t`, in rank order, as

@@ -116,7 +116,7 @@ class RegistrationDisciplineSpec extends AnyFunSuite {
       "domain-bounded 5-plan x 21-bin grid whatever the corpus"))
 
   test("every query from q140 on has a ScaleRehearsal row or exemption") {
-    val rehearsal = read("src/main/scala/graft/ScaleRehearsal.scala")
+    val rehearsal = read("src/test/scala/graft/ScaleRehearsal.scala")
     val missing = SparkEntry.queries.keySet.toSeq.sorted
       .filter(k => qNum(k) >= 140)
       .filter { k =>
@@ -140,7 +140,7 @@ class RegistrationDisciplineSpec extends AnyFunSuite {
     // their 1x/10x/100x exponents on every rehearsal run — removing
     // the standing rows demotes measured scaling claims back to
     // one-time prose, so their absence fails the suite.
-    val rehearsal = read("src/main/scala/graft/ScaleRehearsal.scala")
+    val rehearsal = read("src/test/scala/graft/ScaleRehearsal.scala")
     Seq("decadeOps", "q213_kcore_decade", "q238_closure_audit_decade",
       "_exponents").foreach { marker =>
       assert(rehearsal.contains(marker),

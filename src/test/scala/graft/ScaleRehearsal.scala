@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    shard cosines concentrate near 0 even if the vectors share a
   *    mean component, because the sign mask decorrelates them).
   *
-  * Run: `sbt "runMain graft.ScaleRehearsal /root/testdata/sf0.1"`
+  * Run: `sbt "Test/runMain graft.ScaleRehearsal <sf0.1 data dir>"`
   * (writes each Nx corpus under java.io.tmpdir/graft_scaleN, prints
   * one JSON line per measurement). SPARK_GRAFT_REHEARSAL_SCALES=
   * "1x,10x,30x" adds scale points — the 30x point pins the scaling

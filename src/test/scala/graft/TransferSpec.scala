@@ -4,7 +4,8 @@ import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.Properties
 import graft.etl.Transfer
-import graft.pg.PgCatalog
+import graft.meta.ForeignKey
+import graft.pg.{PgCatalog, PgDdl}
 import org.apache.spark.sql.functions._
 
 /** Transfer + JDBC integration against embedded Derby (a real JDBC
@@ -89,6 +90,37 @@ class TransferSpec extends SparkSpec {
       val tables = PgCatalog.listTables(conn, Some("APP"),
         exclude = Set("APP.NATION_T"))
       assert(tables.contains("REFL_T") && !tables.contains("NATION_T"))
+    } finally conn.close()
+  }
+
+  test("FK reflection keeps the referenced schema and the referential actions (Derby)") {
+    val conn = DriverManager.getConnection(derbyUrl)
+    try {
+      val st = conn.createStatement()
+      Seq("CREATE SCHEMA FKS",
+        "CREATE TABLE FKS.PARENT (ID BIGINT NOT NULL PRIMARY KEY)",
+        "CREATE TABLE FKS.PAIR (A INT NOT NULL, B INT NOT NULL, PRIMARY KEY (A, B))",
+        """CREATE TABLE FKS.CHILD (ID BIGINT NOT NULL PRIMARY KEY, P BIGINT,
+          |  X INT, Y INT,
+          |  CONSTRAINT FK_P FOREIGN KEY (P) REFERENCES FKS.PARENT (ID) ON DELETE CASCADE,
+          |  CONSTRAINT FK_XY FOREIGN KEY (X, Y) REFERENCES FKS.PAIR (A, B))""".stripMargin,
+        "CREATE TABLE FKS.CHILD2 (ID BIGINT NOT NULL PRIMARY KEY, P BIGINT)")
+        .foreach(st.executeUpdate)
+      val child = PgCatalog.tableMeta(conn, Some("FKS"), "CHILD")
+      // NO ACTION, the default, carries no clause
+      assert(child.foreignKeys == Seq(
+        ForeignKey("FK_P", Seq("P"), "FKS.PARENT", Seq("ID"), Some("CASCADE"), None),
+        ForeignKey("FK_XY", Seq("X", "Y"), "FKS.PAIR", Seq("A", "B"), None, None)))
+      val fkP = child.copy(name = "CHILD2",
+        foreignKeys = Seq(child.foreignKeys.head.copy(name = "FK_P2")))
+      val ddl = PgDdl.addForeignKeys(fkP)
+      assert(ddl == Seq("ALTER TABLE \"FKS\".\"CHILD2\" ADD CONSTRAINT \"FK_P2\" " +
+        "FOREIGN KEY (\"P\") REFERENCES \"FKS\".\"PARENT\" (\"ID\") ON DELETE CASCADE"))
+      // the connection's default schema is APP: the statement must
+      // still reach FKS.PARENT, and the action must survive the trip
+      ddl.foreach(st.executeUpdate)
+      assert(PgCatalog.tableMeta(conn, Some("FKS"), "CHILD2").foreignKeys ==
+        fkP.foreignKeys)
     } finally conn.close()
   }
 

@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """Extract one query's formatted plan from a graft.Explain log.
 
+graft.Explain is a test-scope tool; make the log with
+    sbt "Test/runMain graft.Explain <query_name>" > <explain_log>
+
 Usage: extract_plan.py <explain_log> <query_name> <out_file>
 Strips the sbt [info]/[error] prefixes and stops at the [time] line.
 """
