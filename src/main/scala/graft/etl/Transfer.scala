@@ -2,7 +2,7 @@ package graft.etl
 
 import java.sql.Connection
 import java.util.Properties
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutorService, Executors}
 import scala.util.control.NonFatal
 import graft.meta.TableMeta
 import graft.pg.{PgCatalog, PgDdl, SequenceSync}
@@ -107,10 +107,21 @@ object Transfer {
       // resolved case-insensitively from the table's own metadata and
       // quoted exactly as stored — both conventions publish correctly.
       def q(n: String) = "\"" + n.replace("\"", "\"\"") + "\""
-      def columnsOf(pattern: String): Map[String, String] = {
+      val md = conn.getMetaData
+      // metadata lookups take LIKE patterns: escape `_` and `%` so a name
+      // matches only itself. A driver without an escape string (Derby)
+      // gets the name as is, so the rows are also kept only on an exact
+      // table (and schema) match.
+      val esc = md.getSearchStringEscape
+      def like(n: String) =
+        if (esc == null || esc.isEmpty) n
+        else n.replace(esc, esc + esc).replace("_", esc + "_")
+          .replace("%", esc + "%")
+      def columnsOf(schema: Option[String], table: String): Map[String, String] = {
         val m = scala.collection.mutable.Map.empty[String, String]
-        val crs = conn.getMetaData.getColumns(null, null, pattern, "%")
-        while (crs.next()) {
+        val crs = md.getColumns(null, schema.map(like).orNull, like(table), "%")
+        while (crs.next()) if (crs.getString("TABLE_NAME") == table &&
+            schema.forall(_ == crs.getString("TABLE_SCHEM"))) {
           val n = crs.getString("COLUMN_NAME")
           m(n.toLowerCase) = n
         }
@@ -118,13 +129,16 @@ object Transfer {
         m.toMap
       }
       // metadata lookup is case-sensitive while SQL references
-      // case-normalize — try the name as given, then both foldings
+      // case-normalize — try the names as given, then both foldings
       // (a Spark-created table stores an UNQUOTED normalized table
-      // name but QUOTED case-preserved column names)
-      val tableOnly =
-        targetTable.split('.').last.stripPrefix("\"").stripSuffix("\"")
-      val stored = Seq(tableOnly, tableOnly.toUpperCase, tableOnly.toLowerCase)
-        .view.map(columnsOf).find(_.nonEmpty).getOrElse(Map.empty)
+      // name but QUOTED case-preserved column names). The schema of a
+      // qualified target restricts the lookup: a same-named table in
+      // another schema must not lend its columns.
+      val parts = targetTable.split('.').map(_.stripPrefix("\"").stripSuffix("\""))
+      val (schema, tableOnly) = (parts.init.lastOption, parts.last)
+      val stored = Seq[String => String](identity, _.toUpperCase, _.toLowerCase)
+        .view.map(f => columnsOf(schema.map(f), f(tableOnly)))
+        .find(_.nonEmpty).getOrElse(Map.empty)
       // metadata miss (exotic qualified name): keep the pre-round-2
       // unquoted pass-through rather than guessing a quoting
       val targetCols =
@@ -311,32 +325,39 @@ object Transfer {
   }
 
   /** The reference's EP2 three-phase topology
-    * (transfer_data_with_constraints_script.py:235-253): create all
-    * tables without FKs → copy all data → add all FKs → sync
-    * sequences. Load order is independent of the FK graph, so the
-    * phase-2 copies run concurrently (what `pg_restore --jobs` does
-    * for the same job); the reference copies one table after another.
+    * (transfer_data_with_constraints_script.py:235-253): create the
+    * tables without FKs → copy the data → add all FKs → sync sequences.
+    * No copy depends on another table's CREATE, and load order is
+    * independent of the FK graph, so each table's copy starts as soon as
+    * its own CREATE and read return, and the copies run concurrently
+    * (what `pg_restore --jobs` does for the same job); only the FKs wait
+    * for every table. The reference creates every table, then copies one
+    * table after another.
     *
     * The reference also carries a phase-2 lazy create-if-missing
     * fallback (transfer_data_with_constraints_script.py:193-197);
-    * phase 1 here creates every selected table up front
-    * (IF NOT EXISTS), so that fallback has no work left to do and is
-    * deliberately not replicated.
+    * here each table's CREATE (IF NOT EXISTS) runs before its own read,
+    * so that fallback has no work left to do and is deliberately not
+    * replicated.
     *
     * Each table is read once: its copy's action also observes each
     * serial column's MAX, from which phase 4 builds the setval statements
     * with no read or job. A frame lacking a serial column fails its copy.
     *
     * Threading: `execDdl` and `read` run on the caller's thread, in
-    * table order (phase 2 calls `read` once per table before any copy
-    * starts). Only `write` runs concurrently, on a pool this call
-    * creates and shuts down before it returns: at most one `write` per
-    * table, at most min(tables, `defaultParallelism` of the frames'
+    * table order, interleaved per table (a table's CREATE, its read, then
+    * the next table's CREATE). Only `write` runs concurrently, on a pool
+    * this call creates and shuts down before it returns: a table's copy
+    * is submitted as soon as its read returns, so later tables' CREATEs
+    * and reads overlap earlier tables' writes. At most one `write` runs
+    * per table, at most min(tables, `defaultParallelism` of the frames'
     * SparkContext) at a time. The pool's threads are created by the
     * caller, so every `write` sees the caller's Spark local properties
     * (job group, scheduler pool, job tags). Phase 3 starts only after
     * every copy has finished. Each copy waits at most 30 s, after its
-    * `write` returns, for the observed metrics.
+    * `write` returns, for the observed metrics. If `execDdl` or `read`
+    * throws a fatal error, every copy already started is joined before
+    * it propagates.
     *
     * `exclude` holds qualified names kept out of every phase (R6).
     * Errors are isolated per table (R11): one [[TransferResult]] per
@@ -349,13 +370,10 @@ object Transfer {
       write: (TableMeta, DataFrame) => Unit): Seq[TransferResult] = {
     val selected = metas.filterNot(m => exclude.contains(m.qualifiedName))
       .map(new Migration(_))
-    // phase 1: DDL without FKs
-    selected.foreach(t => t.attempt(execDdl(PgDdl.createTable(t.meta))))
-    val created = selected.filter(_.error.isEmpty)
-    // phase 2: data. The row count and the serial maxima ride an
-    // observe() node on the write's own action (the
-    // Pipeline.curateObserved pattern, zero extra action): a count() or
-    // MAX job would re-execute the source read (VERDICT r10 #1).
+    // The row count and the serial maxima ride an observe() node on the
+    // write's own action (the Pipeline.curateObserved pattern, zero
+    // extra action): a count() or MAX job would re-execute the source
+    // read (VERDICT r10 #1).
     // CONTRACT (same as curateObserved): `write` must execute exactly
     // one Spark action over the frame it is given — every real sink
     // (JDBC batch insert, parquet, noop) does.
@@ -381,25 +399,32 @@ object Transfer {
       t.rows = obs.get("rows").asInstanceOf[Long]
       t.maxima = maxima.indices.map(i => obs.get(s"max$i").asInstanceOf[Long])
     }
-    val frames = created.flatMap(t => t.attempt(read(t.meta)).map(t -> _))
-    val threads = frames.headOption.fold(1)(f =>
-      math.min(frames.size, f._2.sparkSession.sparkContext.defaultParallelism))
     // a per-call pool, not a shared one: its threads are created here,
     // on the caller's thread, which is what hands them its local
     // properties; joining them leaves no thread behind
     val workers = new ConcurrentLinkedQueue[Thread]()
-    val pool = Executors.newFixedThreadPool(threads,
-      { (r: Runnable) =>
-        val t = new Thread(r, s"graft-migrate-copy-${workers.size}")
-        workers.add(t)
-        t
-      })
-    try frames.map { case (t, df) => pool.submit(() => t.attempt(copy(t, df))) }
-      .foreach(_.get())
-    finally {
+    var pool: ExecutorService = null
+    def submit(t: Migration, df: DataFrame) = {
+      if (pool == null) pool = Executors.newFixedThreadPool(
+        math.min(selected.size, df.sparkSession.sparkContext.defaultParallelism),
+        { (r: Runnable) =>
+          val th = new Thread(r, s"graft-migrate-copy-${workers.size}")
+          workers.add(th)
+          th
+        })
+      pool.submit(() => t.attempt(copy(t, df)))
+    }
+    // phases 1–2, per table: its CREATE (without FKs), its read, then
+    // its copy starts at once, so later CREATEs overlap earlier copies
+    try selected.flatMap { t =>
+        t.created = t.attempt(execDdl(PgDdl.createTable(t.meta))).isDefined
+        if (t.created) t.attempt(read(t.meta)).map(submit(t, _)) else None
+      }.foreach(_.get())
+    finally if (pool != null) {
       pool.shutdown()
       workers.forEach(_.join())
     }
+    val created = selected.filter(_.created)
     val copied = created.filter(_.error.isEmpty)
     // phases 3–4 isolate each statement like the reference (:163-171):
     // a failure does not stop the rest, but marks its table failed
@@ -413,10 +438,12 @@ object Transfer {
       TransferResult(t.meta.qualifiedName, t.rows, t.error.isEmpty, t.error))
   }
 
-  /** One table across [[migrate]]'s phases: the copy's observed rows
-    * and serial maxima, and the first error of any phase. A pool thread
-    * writes it during the copy; `Future.get` hands that to the caller. */
+  /** One table across [[migrate]]'s phases: whether its CREATE
+    * succeeded, the copy's observed rows and serial maxima, and the first
+    * error of any phase. A pool thread writes it during the copy;
+    * `Future.get` hands that to the caller. */
   private final class Migration(val meta: TableMeta) {
+    var created = false
     var rows = 0L
     var maxima = Seq.empty[Long]
     var error = Option.empty[String]

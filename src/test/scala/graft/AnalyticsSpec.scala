@@ -12,10 +12,31 @@ class AnalyticsSpec extends SparkSpec {
     GraftFunctions.register(spark)
     val samples = Seq("", "a", "hello world", "héllo — ünïcode ⚡",
       "the quick brown fox jumps over the lazy dog")
-    val got = samples.toDF("s")
-      .select(expr("rolling_hash(s)")).collect().map(_.getLong(0))
-    val want = samples.map(References.rollingHash64)
-    assert(got.toSeq == want)
+    val got = collectCodegen(samples.toDF("s").repartition(2)
+        .select(col("s"), expr("rolling_hash(s)")))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == samples.map(s => s -> References.rollingHash64(s)).toMap)
+  }
+
+  /** Collects `df` with the interpreted fallback off, then checks that
+    * its executed plan compiles a projection in whole-stage codegen. A
+    * `Seq(...).toDF` input with no shuffle above it is folded by
+    * ConvertToLocalRelation into a LocalTableScanExec and evaluated
+    * interpreted, so a codegen test over it never runs `doGenCode`. */
+  private def collectCodegen(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    withSQLConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false") {
+      rows = df.collect().toSeq
+    }
+    val plan = df.queryExecution.executedPlan
+    val compiled = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case w: WholeStageCodegenExec if w.child.exists(_.isInstanceOf[ProjectExec]) => w
+    }
+    assert(compiled.nonEmpty, s"no projection in whole-stage codegen:\n$plan")
+    rows
   }
 
   test("GraftExtensions wires builders that eval like the references") {
@@ -187,11 +208,12 @@ class AnalyticsSpec extends SparkSpec {
     // spaces (empty tokens kept, per split() limit -1), unicode
     val samples = Seq("", "one", "two tokens", "a  b", " lead", "trail ",
       "héllo wörld ⚡ tokens", Array.tabulate(80)(i => s"t$i").mkString(" "))
-    val df = samples.toDF("text")
-    val got = df.select(Dedup.simhashExpr("text")).collect().map(_.getLong(0))
-    val want = df.select(References.simhash("text"))
-      .collect().map(_.getLong(0))
-    assert(got.toSeq == want.toSeq)
+    val df = samples.toDF("text").repartition(2)
+    def byText(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = byText(collectCodegen(df.select(col("text"), Dedup.simhashExpr("text"))))
+    val want = byText(df.select(col("text"), References.simhash("text")).collect().toSeq)
+    assert(want.size == samples.size && got == want)
     // corpus-wide agreement on real documents
     val docs = Tables.documents(spark, sf)
     val mismatches = docs.select(
@@ -207,14 +229,20 @@ class AnalyticsSpec extends SparkSpec {
     // float×float (self dot) and float×double-literal (plane dot) paths
     val plane = graft.ops.Similarity.hyperplanes(1, 64).head
     val planeCol = array(plane.map(lit): _*)
-    val mismatches = emb.select(
-        graft.ops.Similarity.dot(col("embedding"), col("embedding")).as("n_ff"),
-        References.dotHof(col("embedding"), col("embedding")).as("h_ff"),
-        graft.ops.Similarity.dot(col("embedding"), planeCol).as("n_fd"),
-        References.dotHof(col("embedding"), planeCol).as("h_fd"))
-      .filter(col("n_ff") =!= col("h_ff") || col("n_fd") =!= col("h_fd"))
-      .count()
-    assert(mismatches == 0, "native dotf differs from HOF form")
+    // the parquet input is not folded into a local relation, but the HOF
+    // lambdas keep this projection out of whole-stage codegen: dotf is
+    // compiled by the projection's own code generator, and CODEGEN_ONLY
+    // makes a compile failure fail here instead of falling back to eval
+    withSQLConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      val mismatches = emb.select(
+          graft.ops.Similarity.dot(col("embedding"), col("embedding")).as("n_ff"),
+          References.dotHof(col("embedding"), col("embedding")).as("h_ff"),
+          graft.ops.Similarity.dot(col("embedding"), planeCol).as("n_fd"),
+          References.dotHof(col("embedding"), planeCol).as("h_fd"))
+        .filter(col("n_ff") =!= col("h_ff") || col("n_fd") =!= col("h_fd"))
+        .count()
+      assert(mismatches == 0, "native dotf differs from HOF form")
+    }
     // length mismatch yields NULL like the HOF null-poisoned sum
     val short = array((0 until 3).map(i => lit(i.toDouble)): _*)
     val r = emb.select(graft.ops.Similarity.dot(col("embedding"), short))

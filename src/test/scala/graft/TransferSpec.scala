@@ -320,6 +320,37 @@ class TransferSpec extends SparkSpec {
     assert(back.toSeq == Seq((1L, "a"), (2L, "b")))
   }
 
+  test("atomicLoad resolves the target's columns in the target's own schema") {
+    // APP.ATOM has unquoted (uppercase) columns; a Spark-created
+    // OTHER.ATOM has quoted lowercase ones. Publishing into APP.ATOM
+    // must not take its column names from OTHER.ATOM.
+    val conn = DriverManager.getConnection(derbyUrl)
+    conn.createStatement().executeUpdate(
+      "CREATE TABLE APP.ATOM (ID BIGINT, NAME VARCHAR(16))")
+    conn.close()
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+    df.limit(0).write.jdbc(derbyUrl, "OTHER.ATOM", props)
+    Transfer.atomicLoad(df, derbyUrl, "APP.ATOM", props,
+      () => DriverManager.getConnection(derbyUrl))
+    def rows(t: String) = spark.read.jdbc(derbyUrl, t, props)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(rows("APP.ATOM") == Seq((1L, "a"), (2L, "b")))
+    assert(rows("OTHER.ATOM").isEmpty)
+    // a `_` in the target's name is not a wildcard (Derby reports no
+    // escape string): APP.ATOM_W must not take its column names from
+    // APP."ATOMaW", which sorts after it in the metadata rows
+    val c2 = DriverManager.getConnection(derbyUrl)
+    try {
+      c2.createStatement().executeUpdate(
+        "CREATE TABLE APP.ATOM_W (ID BIGINT, NAME VARCHAR(16))")
+      c2.createStatement().executeUpdate(
+        "CREATE TABLE APP.\"ATOMaW\" (\"id\" BIGINT, \"name\" VARCHAR(16))")
+    } finally c2.close()
+    Transfer.atomicLoad(df, derbyUrl, "APP.ATOM_W", props,
+      () => DriverManager.getConnection(derbyUrl))
+    assert(rows("APP.ATOM_W") == Seq((1L, "a"), (2L, "b")))
+  }
+
   test("JDBC scan pushes filters to the source database") {
     val df = Seq((1L, "a"), (50L, "b"), (99L, "c")).toDF("id", "name")
     df.write.mode("overwrite").jdbc(derbyUrl, "push_t", props)
@@ -533,7 +564,52 @@ class TransferSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val seen = calls.asScala.toSeq
     assert(seen.forall(_._2 eq caller), seen)
-    assert(seen.map(_._1) == tables.map("ddl " + _.name) ++ tables.map("read " + _.name))
+    assert(seen.map(_._1) == tables.flatMap(t => Seq("ddl " + t.name, "read " + t.name)))
+  }
+
+  test("migrate starts a table's copy before the next table's CREATE returns") {
+    // ovl_b's CREATE waits for ovl_a's write: with every CREATE run
+    // before the first copy, the wait times out and ovl_b fails
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val data = Seq(1L, 2L).toDF("id")
+    val results = Transfer.migrate(plainTables("ovl_a", "ovl_b"),
+      exclude = Set.empty,
+      execDdl = { sql =>
+        if (sql.startsWith("CREATE TABLE") && sql.contains("ovl_b") &&
+            !started.await(10, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException("ovl_a's write had not started")
+      },
+      read = _ => data,
+      write = { (m, df) =>
+        if (m.name == "ovl_a") started.countDown()
+        noopWrite(df)
+      })
+    assert(results.forall(r => r.ok && r.rows == 2), results)
+  }
+
+  test("migrate joins the copies it started when a CREATE throws a fatal error") {
+    // InterruptedException is not NonFatal: it escapes migrate, but only
+    // after the copy already running for int_a has finished
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val data = Seq(1L).toDF("id")
+    val e = intercept[InterruptedException] {
+      Transfer.migrate(plainTables("int_a", "int_b", "int_c"),
+        exclude = Set.empty,
+        execDdl = { sql =>
+          if (sql.startsWith("CREATE TABLE") && sql.contains("int_b"))
+            throw new InterruptedException("create interrupted")
+        },
+        read = _ => data,
+        write = { (m, df) =>
+          writers.add(Thread.currentThread()); written.add(m.name); noopWrite(df)
+        })
+    }
+    assert(e.getMessage == "create interrupted")
+    import scala.jdk.CollectionConverters._
+    assert(written.asScala == Set("int_a"))
+    val alive = writers.asScala.filter(_.isAlive)
+    assert(alive.isEmpty, s"threads alive after migrate: ${alive.map(_.getName)}")
   }
 
   test("migrate hands the caller's Spark local properties to every write") {
