@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.GraftFunctions.{minhash64, shingle8}
+import graft.functions.GraftFunctions.{minhash64, shingle8, winnow8_8}
 import graft.ops.{Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * composes them into a single Catalyst job graph per output. Stage
   * order is the scale-correct one: cheap narrow filters (quality,
   * lang) shrink the corpus BEFORE the shuffling stages (dedup), and
-  * the near-dup stage only ever shuffles ids + signatures.
+  * the near-dup stage moves signatures and texts only for LSH
+  * candidate pairs.
   */
 object Pipeline {
 
@@ -38,11 +39,13 @@ object Pipeline {
       maxPerSource: Int = Int.MaxValue): (DataFrame, CurationReport) = {
     val oc = curateObserved(docs, minQuality, nearDupJaccard)
     val curated = oc.curated.persist()
-    val afterNear = curated.count()
     def rows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
-    val (input, afterQuality, afterExact) =
-      (rows(oc.input), rows(oc.afterQuality), rows(oc.afterExact))
-    oc.release()
+    // a failed count leaves none of this call's caches behind
+    val (afterNear, input, afterQuality, afterExact) =
+      try (curated.count(), rows(oc.input), rows(oc.afterQuality),
+        rows(oc.afterExact))
+      catch { case e: Throwable => curated.unpersist(); throw e }
+      finally oc.release()
 
     // 5. dataset mixing: deterministic per-language sampling (rand-free
     // keep decision — retries and corpus growth can't change it)
@@ -62,16 +65,7 @@ object Pipeline {
       CurationReport(input, afterQuality, afterExact, afterNear, afterSample))
   }
 
-  /** The curation funnel with ZERO extra actions: every stage count is
-    * an `observe()` metric collected WHILE the caller's single output
-    * action runs — the production shape, where a 100 TB curation run
-    * cannot afford four extra passes just to report its funnel. The
-    * one persist remains (a shared subplan — the LSH bands, the
-    * estimate's two signature joins, the verify's text joins and the
-    * survivors all read the exact-dedup result) but nothing forces it
-    * early; it materializes inside the one action, firing the observe
-    * nodes exactly once. Metrics are read with `Observation.get` AFTER
-    * the action completes; `release()` drops this run's cache. */
+  /** What [[curateObserved]] returns. */
   final case class ObservedCuration(curated: DataFrame,
       input: Observation,
       afterQuality: Observation,
@@ -79,14 +73,28 @@ object Pipeline {
       afterNear: Observation,
       release: () => Unit)
 
+  /** The curation funnel with ZERO extra actions: every stage count is
+    * an `observe()` metric collected WHILE the caller's single output
+    * action runs — the production shape, where a 100 TB curation run
+    * cannot afford four extra passes just to report its funnel. The
+    * one persist remains (a shared subplan — the LSH bands, the two
+    * pair-side joins, each fetching signature and text at once, and
+    * the survivors all read the exact-dedup result) but nothing forces
+    * it early; it materializes inside the one action, firing the
+    * observe nodes exactly once. Metrics are read with
+    * `Observation.get` AFTER the action; `release()` drops the cache.
+    *
+    * Precondition: `doc_id`s are unique. The left-anti join drops EVERY
+    * row whose `doc_id` equals a verified pair's `doc_b`, so two texts
+    * sharing a `doc_id` both go when one is a near duplicate. */
   def curateObserved(docs: DataFrame, minQuality: Double = 0.5,
       nearDupJaccard: Double = 0.9): ObservedCuration = {
     val (oIn, oQ, oE, oN) =
       (Observation(), Observation(), Observation(), Observation())
     def rows = count(lit(1)).as("rows")
-    // Each observe() sits BELOW the `exact` persist, so the node lands
-    // inside the cached plan and fires exactly once per materialization
-    // even though `exact` feeds multiple downstream branches.
+    // The first three observe()s sit BELOW the `exact` persist, so they
+    // land inside the cached plan and fire exactly once per
+    // materialization even though `exact` feeds several branches.
     // 1. narrow stages first: PII scrub (pure regexp projections) and
     // quality filter (shared scoring expression) shrink/clean the
     // corpus before anything shuffles. The input count sits between
@@ -111,21 +119,20 @@ object Pipeline {
     // cannot strip it mid-flight.
     val exact = scored.groupBy(sha2(col("text"), 256))
       .agg(min_by(struct(scored.columns.map(col): _*), col("doc_id")).as("row"))
-      .where(col("row").isNotNull).select("row.*")
+      .where(col("row").isNotNull)
+      .select(col("row.*"), minhash64(shingle8(col("row.text"))).as("sig"))
       .observe(oE, rows)
-      .withColumn("sig", minhash64(shingle8(col("text"))))
       .persist()
     // 3. near-dedup (MinHash-LSH): drop the higher doc_id of each
-    // near-dup pair
-    val nearPairs = Dedup.nearDupPairs(exact, "doc_id", nearDupJaccard,
-        sigsOpt = Some(exact.select("doc_id", "sig")))
-      .select(col("doc_b").as("doc_id")).distinct()
-    val curatedBase = exact.drop("sig")
-      .join(nearPairs, Seq("doc_id"), "left_anti")
-      .observe(oN, rows)
+    // verified pair (an anti join ignores repeats, so no distinct);
     // 4. fingerprint the survivors (downstream incremental dedup key)
-    val curated = TextAnalysis.winnowed(curatedBase)
-      .withColumn("content_hash", sha2(col("text"), 256))
+    val curated = exact
+      .join(Dedup.cachedNearDupPairs(exact, "doc_id", nearDupJaccard),
+        col("doc_id") === col("doc_b"), "left_anti")
+      .select(scored.columns.map(col) :+
+        winnow8_8(col("text")).as("fingerprints") :+
+        sha2(col("text"), 256).as("content_hash"): _*)
+      .observe(oN, rows)
     ObservedCuration(curated, oIn, oQ, oE, oN,
       () => exact.unpersist(): Unit)
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,8 +106,8 @@ object BandPlan {
     * Same shingle primitive as q41 (native shingle8; the q41 oracle
     * replays it as substring sets). */
   def jaccardPairsPpm(docs: DataFrame, maxId: Long = 200L): DataFrame = {
-    val sh = Dedup.shingles(docs.filter(col("doc_id") < maxId))
-      .select(col("doc_id"), col("sh"))
+    val sh = docs.filter(col("doc_id") < maxId)
+      .select(col("doc_id"), GraftFunctions.shingle8(col("text")).as("sh"))
     val g = sh.select(col("doc_id"), explode(col("sh")).as("h"))
     val sizes =
       sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))

@@ -285,19 +285,6 @@ object Dedup extends SetSimJoins with SetSimIndexing
   val Bands = 16
   val RowsPerBand: Int = NumHashes / Bands
 
-  /** Distinct 8-byte shingle hashes per document (native codegen
-    * expression — see graft.functions.ShingleHashes). */
-  def shingles(df: DataFrame, textCol: String = "text"): DataFrame = {
-    df.withColumn("sh", shingle8(col(textCol)))
-  }
-
-  /** 64-element MinHash signature via the native codegen expression
-    * (graft.functions.MinHashSignature) — one JIT'd pass per row
-    * instead of 64 interpreted transform() lambdas. */
-  def minHashSignatures(df: DataFrame): DataFrame = {
-    shingles(df).withColumn("sig", minhash64(col("sh")))
-  }
-
   /** (id, band_id, band_hash) rows for a signature table — THE banding
     * scheme, shared by same-corpus and incremental candidate
     * generation. Ids only: the band rows must never carry shingle
@@ -311,11 +298,23 @@ object Dedup extends SetSimJoins with SetSimIndexing
         hash(slice(col("sig"), b * RowsPerBand + 1, RowsPerBand), lit(b))): _*))
         .as(Seq("band_id", "band_hash")))
 
-  /** Candidate-pruning by signature estimate: keep pairs whose
-    * matching-minhash fraction is within the estimator's noise margin
-    * of the threshold (σ ≈ sqrt(J(1-J)/64) ≈ 0.06; margin 0.2 ≈ 3σ).
-    * `sigsA`/`sigsB` are (id, sig) frames (same frame for a
-    * within-corpus self-join; distinct frames for incremental). */
+  /** The estimate filter: the share of matching signature positions
+    * (native graft.functions.EqCount) is within the estimator's noise
+    * margin of the threshold (σ ≈ sqrt(J(1-J)/64) ≈ 0.06; 0.2 ≈ 3σ). */
+  def estimateKeeps(sigA: Column, sigB: Column, minJaccard: Double): Column =
+    eqCount(sigA, sigB).cast("double") / NumHashes >= minJaccard - 0.2
+
+  /** Exact Jaccard of two texts' 8-byte shingle sets, rounded to 6
+    * places; only the pairs that reach it pay for shingle arrays. */
+  def shingleJaccard(textA: Column, textB: Column): Column = {
+    val (a, b) = (shingle8(textA), shingle8(textB))
+    round(size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double"), 6)
+  }
+
+  /** Candidate-pruning by signature estimate ([[estimateKeeps]]): each
+    * pair side joins its (id, sig) frame once (the same frame for a
+    * self-join; distinct frames for incremental). */
   def estimatePrune(pairs: DataFrame, sigsA: DataFrame, sigsB: DataFrame,
       aCol: String, bCol: String, minJaccard: Double): DataFrame =
     pairs
@@ -323,14 +322,7 @@ object Dedup extends SetSimJoins with SetSimIndexing
         col("sig").as("sig_a")), aCol)
       .join(sigsB.select(col(sigsB.columns.head).as(bCol),
         col("sig").as("sig_b")), bCol)
-      // native matching-position count (graft.functions.EqCount) —
-      // the zip_with/filter lambda pair ran interpreted per LSH
-      // candidate (r16 census rule); same count incl. null/length
-      // edges (NativeCountsSpec)
-      .withColumn("est_j",
-        eqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / NumHashes)
-      .filter(col("est_j") >= minJaccard - 0.2)
+      .where(estimateKeeps(col("sig_a"), col("sig_b"), minJaccard))
       .select(aCol, bCol)
 
   /** Bucket-size cap: above this, a bucket's pairs switch
@@ -362,56 +354,47 @@ object Dedup extends SetSimJoins with SetSimIndexing
     * star pairing keeps the linear cost without that recall hole. */
   def lshCandidatePairs(sigs: DataFrame, idCol: String,
       maxBucket: Int = MaxBucket): DataFrame = {
-    val ids = col("ids")
-    bandedIds(sigs.select(col(idCol), col("sig")), "__band_id_col")
+    val (ids, i) = (col("ids"), col("i"))
+    bandedIds(sigs.select(col(idCol), col("sig")), "id")
       .groupBy(col("band_id"), col("band_hash"))
-      .agg(sort_array(collect_list(col("__band_id_col"))).as("ids"))
+      .agg(sort_array(collect_list(col("id"))).as("ids"))
       .where(size(ids) > 1)
       .select(ids, posexplode(ids).as(Seq("i", "doc_a")))
       // a small bucket pairs each member with every later one; a
       // large one pairs only ids[0], its min id, with the rest
-      .where(size(ids) <= maxBucket || col("i") === 0)
-      .select(col("doc_a"),
-        explode(slice(ids, col("i") + 2, size(ids))).as("doc_b"))
+      .select(col("doc_a"), explode(slice(ids, i + 2,
+        when(size(ids) <= maxBucket || i === 0, size(ids)).otherwise(0)))
+        .as("doc_b"))
       // sorted ids: this keeps j > i and drops a repeated id's self pair
       .where(col("doc_a") < col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Materialized (id, sig) signature table. Shingling + minhashing is
-    * the most expensive linear pass over the corpus, and the LSH
-    * pipeline references signatures from three plan branches (bands
-    * ×1, estimate-prune ×2) — without materialization Catalyst
-    * recomputes the shingling per branch (six corpus re-shinglings in
-    * the round-1 q41 plan). Only the 512-byte signatures are cached,
-    * NOT the shingle arrays (~8 bytes per character — caching them is
-    * a corpus-sized copy at 100 TB); the exact-verify stage re-shingles
-    * just the estimate survivors instead ([[exactVerify]]). A
-    * multi-job production pipeline would stage this table to parquet
-    * once and join against it.
+  /** Materialized (id, sig) signature table: 64 native MinHash values
+    * per row (graft.functions.MinHashSignature), the most expensive
+    * linear pass over the corpus. The bands and the estimate's two
+    * joins read it, so the shingling runs once, not per plan branch
+    * (six corpus re-shinglings in the round-1 q41 plan). Only the
+    * 512-byte signatures are cached, NOT the shingle arrays (~8 bytes
+    * per character, a corpus-sized copy at 100 TB).
     *
-    * `track = false` hands the cache lifecycle to the caller (the frame
+    * `track = false` hands the cache lifecycle to the caller: the frame
     * is NOT added to the global registry, so a concurrent
     * `unpersistCaches` can't strip it and repeated per-run builds can't
-    * grow the registry unboundedly) — the caller then owns the
-    * unpersist. */
+    * grow the registry; the caller then owns the unpersist. */
   def signatureTable(df: DataFrame, idCol: String,
       track: Boolean = true): DataFrame = {
-    val sigs = minHashSignatures(df).select(col(idCol), col("sig"))
+    val sigs = df.select(col(idCol), minhash64(shingle8(col("text"))).as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     if (track) register(sigs) else sigs
   }
 
   // internal caches pinned by signatureTable/simhashNearDups; a
-  // long-lived session composing many dedup runs releases them with
-  // [[unpersistCaches]] once all in-flight results are materialized —
-  // otherwise each distinct input corpus would pin its signature cache
-  // for the JVM lifetime. Runs needing per-call lifecycle pass their
-  // own (id, sig) frame through nearDupPairs' sigsOpt and unpersist
-  // exactly that frame (Pipeline.curateObserved computes the signature
-  // inside its own exact-dedup cache), since this registry is
-  // JVM-global: draining it mid-flight would strip another concurrent
-  // run's cache.
+  // long-lived session releases them with [[unpersistCaches]] once all
+  // in-flight results are materialized. The registry is JVM-global, so
+  // a run needing its own lifecycle caches its signatures itself and
+  // unpersists exactly that frame (Pipeline.curateObserved's
+  // exact-dedup cache, read by cachedNearDupPairs).
   private val cached =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
@@ -426,41 +409,49 @@ object Dedup extends SetSimJoins with SetSimIndexing
     while (df != null) { df.unpersist(); df = cached.poll() }
   }
 
-  /** Exact shingle-set Jaccard over candidate id pairs: texts are
-    * fetched by id-join and shingled AFTER the join, so only the
-    * (rare) estimate survivors pay for shingle arrays — nothing
-    * corpus-sized is cached or shuffled. */
+  /** Exact shingle-set Jaccard ([[shingleJaccard]]) over candidate id
+    * pairs: each pair side joins its documents once, for the text. */
   def exactVerify(pairs: DataFrame, docsA: DataFrame, idA: String, aCol: String,
-      docsB: DataFrame, idB: String, bCol: String, minJaccard: Double,
-      textCol: String = "text"): DataFrame = {
+      docsB: DataFrame, idB: String, bCol: String, minJaccard: Double): DataFrame =
     pairs
-      .join(docsA.select(col(idA).as(aCol), col(textCol).as("__text_a")), aCol)
-      .join(docsB.select(col(idB).as(bCol), col(textCol).as("__text_b")), bCol)
-      .withColumn("sh_a", shingle8(col("__text_a")))
-      .withColumn("sh_b", shingle8(col("__text_b")))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col(aCol), col(bCol), col("jaccard"))
+      .join(docsA.select(col(idA).as(aCol), col("text").as("text_a")), aCol)
+      .join(docsB.select(col(idB).as(bCol), col("text").as("text_b")), bCol)
+      .select(col(aCol), col(bCol),
+        shingleJaccard(col("text_a"), col("text_b")).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
+
+  /** LSH → estimate → exact verify (the scalable three-stage shape).
+    * The signatures run ONCE into an (id, sig) cache ([[signatureTable]])
+    * read by the bands and [[estimatePrune]]'s two joins; only the
+    * survivors join their texts ([[exactVerify]]); no text is cached.
+    *
+    * [[cachedNearDupPairs]] runs the same stages over a cache that also
+    * holds the text: one join per pair side, for signature and text,
+    * then the estimate and verify filters. Bound: those joins carry
+    * both texts of every LSH candidate, also of those the estimate
+    * prunes, so a shuffled pair-side join moves up to (candidates −
+    * estimate survivors) × 2 texts more than the estimate's joins. On
+    * the 10x rehearsal corpus the pair sides still broadcast, and time
+    * and shuffle bytes matched the separate joins' (SCALE.md). */
+  def nearDupPairs(df: DataFrame, idCol: String, minJaccard: Double): DataFrame = {
+    val sigs = signatureTable(df, idCol)
+    exactVerify(estimatePrune(lshCandidatePairs(sigs, idCol),
+        sigs, sigs, "doc_a", "doc_b", minJaccard),
+      df, idCol, "doc_a", df, idCol, "doc_b", minJaccard)
   }
 
-  /** LSH → estimate → exact verify (the scalable three-stage shape):
-    * candidates are id pairs; the 64-long signatures are joined back to
-    * estimate Jaccard (matching-minhash fraction) and prune; only the
-    * survivors pay for the exact shingle-set Jaccard (shingled
-    * post-join in exactVerify). The signature computation runs ONCE
-    * (signatureTable) — the band and estimate stages read the same
-    * materialized frame. */
-  def nearDupPairs(df: DataFrame, idCol: String, minJaccard: Double,
-      sigsOpt: Option[DataFrame] = None): DataFrame = {
-    // `sigsOpt`: an (id, sig) frame the caller materialized and owns,
-    // e.g. a projection of a cache that already holds `df`'s signature
-    // (Pipeline.curateObserved), so no signature table is built here
-    val sigs = sigsOpt.getOrElse(signatureTable(df, idCol))
-    val estimated = estimatePrune(lshCandidatePairs(sigs, idCol),
-      sigs, sigs, "doc_a", "doc_b", minJaccard)
-    exactVerify(estimated, df, idCol, "doc_a", df, idCol, "doc_b", minJaccard)
+  /** [[nearDupPairs]] over a caller-owned cache of (`idCol`, `text`,
+    * `sig`) rows: one join per pair side (the bound is stated there). */
+  def cachedNearDupPairs(cache: DataFrame, idCol: String,
+      minJaccard: Double): DataFrame = {
+    def side(s: String) = cache.select(col(idCol).as(s"doc_$s"),
+      col("sig").as(s"sig_$s"), col("text").as(s"text_$s"))
+    lshCandidatePairs(cache, idCol)
+      .join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .where(estimateKeeps(col("sig_a"), col("sig_b"), minJaccard))
+      .select(col("doc_a"), col("doc_b"),
+        shingleJaccard(col("text_a"), col("text_b")).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
   }
 
   /** MinHash accuracy contract (q192): over the exact near-dup pairs
@@ -511,7 +502,7 @@ object Dedup extends SetSimJoins with SetSimIndexing
     val sh = register(docs.select(col("doc_id"),
         sort_array(shingle8(col("text"))).as("sh"))
       .persist(StorageLevel.MEMORY_AND_DISK))
-    val sigs = minHashSignatures(docs).select(col("doc_id"), col("sig"))
+    val sigs = docs.select(col("doc_id"), minhash64(shingle8(col("text"))).as("sig"))
     // exact PPJoin PREFIX candidates on the HASH total order instead
     // of the all-pairs join: two docs with J >= t must share a hash
     // among each one's first n - ceil(t*n) + 1 SMALLEST hashes (the

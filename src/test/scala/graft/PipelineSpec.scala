@@ -124,6 +124,54 @@ class PipelineSpec extends SparkSpec {
     assert(r2.afterNear == r2.input, "second pass removed documents")
   }
 
+  test("a curation whose count fails leaves no cache behind") {
+    // the action fails on one row: doc 3's text raises inside the
+    // cached exact-dedup plan, so the exact-dedup cache is already
+    // registered when the count throws
+    val good = "the catalyst optimizer rewrites logical plans into " +
+      "physical plans of the engine and a broadcast join is the fast path"
+    val docs = Seq((1L, good), (2L, good.replace("broadcast", "shuffle")),
+        (3L, good.replace("fast", "slow")))
+      .toDF("doc_id", "text").repartition(2) // not a LocalRelation fold
+      .withColumn("text", when(col("doc_id") === 3L,
+        raise_error(lit("planted failure"))).otherwise(col("text")))
+    def caches = org.apache.spark.sql.shim.CachedEntries(spark)
+    val before = caches
+    val e = intercept[Exception](Pipeline.curate(docs, minQuality = 0.0))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted failure")), e)
+    assert(caches == before, s"${caches - before} caches left behind")
+  }
+
+  test("fused near-dup pairs equal the two-stage estimate-then-verify pairs") {
+    // one join per pair side (signature and text together) against the
+    // separate estimate and verify joins, on the sf0.01 documents: at
+    // 0.4 both the estimate and the verify drop candidates, at 0.9
+    // (curation's default) the estimate passes only verified pairs
+    import graft.functions.GraftFunctions.{minhash64, shingle8}
+    val cache = Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("text"),
+        minhash64(shingle8(col("text"))).as("sig"))
+      .persist()
+    try {
+      val sigs = cache.select("doc_id", "sig")
+      val candidates = ops.Dedup.lshCandidatePairs(cache, "doc_id")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)]
+          .collect().toSet
+      Seq(0.4, 0.9).foreach { t =>
+        val fused = pairs(ops.Dedup.cachedNearDupPairs(cache, "doc_id", t))
+        assert(fused.nonEmpty, s"no near pairs at $t")
+        assert(fused == pairs(References.twoStageNearDupPairs(cache, t)), t)
+      }
+      val estimated = ops.Dedup.estimatePrune(candidates, sigs, sigs,
+        "doc_a", "doc_b", 0.4).count()
+      assert(estimated < candidates.count(), "the estimate pruned nothing")
+      assert(pairs(ops.Dedup.cachedNearDupPairs(cache, "doc_id", 0.4)).size <
+        estimated, "the verify dropped nothing")
+    } finally cache.unpersist()
+  }
+
   test("observed curation: funnel metrics from ONE action equal the counted funnel") {
     // plant exact copies (new ids) so the exact-dedup stage has work
     val base = Tables.documents(spark, sf)

@@ -109,6 +109,43 @@ class PlanShapeSpec extends SparkSpec {
     } finally oc.release()
   }
 
+  test("curated near dedup joins each pair side to the cache once, with no distinct") {
+    // under the left-anti join, the near-pair ids read the exact-dedup
+    // cache three times: the LSH bands once and each pair side once,
+    // for its signature and text together; and no aggregate (a
+    // distinct on doc_b) sits between the anti join and the pair joins
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _: InMemoryTableScanExec => Nil
+      case other => other.children
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+    def aboveJoins(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BaseJoinExec => Nil
+      case other => other +: kids(other).flatMap(aboveJoins)
+    }
+    val oc = Pipeline.curateObserved(Tables.documents(spark, sf))
+    try {
+      oc.curated.collect()
+      val anti = all(oc.curated.queryExecution.executedPlan).collect {
+        case j: BaseJoinExec if j.joinType == LeftAnti => j
+      }
+      assert(anti.size == 1, s"${anti.size} left-anti joins")
+      val nearIds = anti.head.right
+      val scans = all(nearIds).count(_.isInstanceOf[InMemoryTableScanExec])
+      assert(scans == 3, s"$scans cache scans under the near-pair ids")
+      val aggs = aboveJoins(nearIds).filter(_.isInstanceOf[BaseAggregateExec])
+      assert(aggs.isEmpty, s"aggregate before the anti join: $aggs")
+    } finally oc.release()
+  }
+
   test("q126 verify stage is size-conditional: broadcast small, shuffled-hash large") {
     // below graft.setsim.broadcastBytes the gram-set verify joins
     // broadcast (fast at test scale); forcing the threshold to 0

@@ -1,8 +1,10 @@
 package graft
 
 import graft.functions.BpeMergeTable
-import graft.functions.GraftFunctions.rollingHash
-import org.apache.spark.sql.Column
+import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{eqCount, rollingHash}
+import graft.ops.Dedup
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Plain-Scala and interpreted higher-order-function references that
@@ -94,5 +96,30 @@ object References {
       zip_with(counts, bits, (c, i) =>
         when(c >= 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
       lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
+
+  /** Verified near-dup pairs of a (doc_id, text, sig) frame by two
+    * separate stages: the estimate joins each LSH candidate's two
+    * signatures and prunes, then the verify joins each survivor's two
+    * texts and keeps shingle-set Jaccard >= `minJaccard`. Four pair-side
+    * joins, with the expressions written out here, against which
+    * `Dedup.cachedNearDupPairs`' one join per side is compared. */
+  def twoStageNearDupPairs(docs: DataFrame, minJaccard: Double): DataFrame = {
+    def side(s: String, c: String) =
+      docs.select(col("doc_id").as(s"doc_$s"), col(c).as(s"${c}_$s"))
+    Dedup.lshCandidatePairs(docs, "doc_id")
+      .join(side("a", "sig"), "doc_a").join(side("b", "sig"), "doc_b")
+      .withColumn("est_j",
+        eqCount(col("sig_a"), col("sig_b")).cast("double") / Dedup.NumHashes)
+      .filter(col("est_j") >= minJaccard - 0.2)
+      .select("doc_a", "doc_b")
+      .join(side("a", "text"), "doc_a").join(side("b", "text"), "doc_b")
+      .withColumn("sh_a", GraftFunctions.shingle8(col("text_a")))
+      .withColumn("sh_b", GraftFunctions.shingle8(col("text_b")))
+      .withColumn("jaccard", round(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
+      .filter(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "jaccard")
   }
 }

@@ -268,6 +268,19 @@ object ScaleRehearsal {
         Dedup.unpersistCaches()
         report("q41_minhash_pipeline", tPairs, nPairs)
       }
+      // curate: one observed curation pass written to the noop sink,
+      // with the shuffle bytes it wrote; rows = documents kept
+      if (wanted("curate")) {
+        val ((nKept, tCur), bytes) = shuffleBytesDuring(spark)(timed {
+          val oc = Pipeline.curateObserved(d)
+          try {
+            oc.curated.write.format("noop").mode("overwrite").save()
+            oc.afterNear.get("rows").asInstanceOf[Long]
+          } finally oc.release()
+        })
+        report("curate_pass", tCur, nKept)
+        report("curate_shuffle_write_bytes", 0.0, bytes)
+      }
       // q128: the value-histogram family's floor evidence (VERDICT
       // r15 #7 — q128/q135/q122/q100/q94 share the shape): the
       // family's cost is SEQUENTIAL aggregate rounds, not data
