@@ -23,46 +23,50 @@ object Pipeline {
       input: Long, afterQuality: Long, afterExact: Long, afterNear: Long,
       afterSample: Long)
 
-  /** Curate a document corpus: returns (curated corpus, report).
+  /** Curate a document corpus into `sink` and return its funnel. The
+    * owner of [[curateObserved]]'s frame (same precondition: unique
+    * `doc_id`s): it adds the optional mixing stage (per-language
+    * sampling, per-source cap; both read only doc_id, lang and source)
+    * and a fifth count to that plan, runs `sink` as the one action,
+    * waits for the counts with `migrate`'s bounded wait (`sink` must run
+    * exactly one Spark action over its frame), and releases the
+    * exact-dedup cache whatever happens.
     *
-    * A thin wrapper over [[curateObserved]]: the curated frame is
-    * persisted and counted ONCE, and that single action also fills the
-    * input/quality/exact observations. The optional mixing stage
-    * (per-language sampling, per-source cap) runs on the persisted
-    * curated rows and costs one more count. Both keep decisions read
-    * only doc_id, lang and source, which fingerprinting leaves as they
-    * are, so mixing after it keeps the same rows. */
+    * Adaptive execution drops the scan of an empty exact-dedup cache,
+    * and the three counts observed inside it. On that path only (an
+    * empty corpus, or no document of quality), one more action, an
+    * aggregate over the scored input, counts the input and the quality
+    * survivors. */
   def curate(docs: DataFrame, minQuality: Double = 0.5,
       nearDupJaccard: Double = 0.9,
       sampleRates: Map[String, Double] = Map.empty,
       defaultSampleRate: Double = 1.0,
-      maxPerSource: Int = Int.MaxValue): (DataFrame, CurationReport) = {
-    val oc = curateObserved(docs, minQuality, nearDupJaccard)
-    val curated = oc.curated.persist()
-    def rows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
-    // a failed count leaves none of this call's caches behind
-    val (afterNear, input, afterQuality, afterExact) =
-      try (curated.count(), rows(oc.input), rows(oc.afterQuality),
-        rows(oc.afterExact))
-      catch { case e: Throwable => curated.unpersist(); throw e }
-      finally oc.release()
-
-    // 5. dataset mixing: deterministic per-language sampling (rand-free
-    // keep decision — retries and corpus growth can't change it)
-    val rateSampled =
-      if (sampleRates.isEmpty && defaultSampleRate >= 1.0) curated
-      else Sampling.stratifiedSample(curated, "doc_id", "lang",
-        sampleRates, defaultSampleRate)
-    // balanced mixing: cap any over-represented source (deterministic
-    // hash order, so retries and other-source growth can't change it)
-    val sampled =
-      if (maxPerSource == Int.MaxValue) rateSampled
-      else Sampling.capPerGroup(rateSampled, "doc_id", "source",
-        maxPerSource).drop("pick_rank")
-    val afterSample = if (sampled eq curated) afterNear else sampled.count()
-
-    (sampled,
-      CurationReport(input, afterQuality, afterExact, afterNear, afterSample))
+      maxPerSource: Int = Int.MaxValue)(sink: DataFrame => Unit): CurationReport = {
+    val (oc, oS) = (curateObserved(docs, minQuality, nearDupJaccard), Observation())
+    try {
+      // 5. dataset mixing: deterministic per-language sampling (rand-free
+      // keep decision — retries and corpus growth can't change it)
+      val rateSampled =
+        if (sampleRates.isEmpty && defaultSampleRate >= 1.0) oc.curated
+        else Sampling.stratifiedSample(oc.curated, "doc_id", "lang",
+          sampleRates, defaultSampleRate)
+      // balanced mixing: cap any over-represented source (deterministic
+      // hash order, so retries and other-source growth can't change it)
+      val sampled =
+        if (maxPerSource == Int.MaxValue) rateSampled
+        else Sampling.capPerGroup(rateSampled, "doc_id", "source",
+          maxPerSource).drop("pick_rank")
+      sink(sampled.observe(oS, count(lit(1)).as("rows")))
+      val Seq(in, q, e, n, s) = Seq(oc.input, oc.afterQuality, oc.afterExact,
+        oc.afterNear, oS).map(Observed.metrics(_, "curate", "sink")
+        .get("rows").map(_.asInstanceOf[Long]))
+      if (e.isDefined) CurationReport(in.get, q.get, e.get, n.get, s.get)
+      else { // an empty exact-dedup cache: see above
+        val r = scrubAndScore(docs).agg(count(lit(1)),
+          count_if(col("quality_score") >= minQuality)).head()
+        CurationReport(r.getLong(0), r.getLong(1), 0, 0, 0)
+      }
+    } finally oc.release()
   }
 
   /** What [[curateObserved]] returns. */
@@ -73,16 +77,17 @@ object Pipeline {
       afterNear: Observation,
       release: () => Unit)
 
-  /** The curation funnel with ZERO extra actions: every stage count is
-    * an `observe()` metric collected WHILE the caller's single output
-    * action runs — the production shape, where a 100 TB curation run
-    * cannot afford four extra passes just to report its funnel. The
-    * one persist remains (a shared subplan — the LSH bands, the two
-    * pair-side joins, each fetching signature and text at once, and
-    * the survivors all read the exact-dedup result) but nothing forces
-    * it early; it materializes inside the one action, firing the
-    * observe nodes exactly once. Metrics are read with
-    * `Observation.get` AFTER the action; `release()` drops the cache.
+  /** The curation funnel's frame builder, with ZERO extra actions:
+    * every stage count is an `observe()` metric collected WHILE the
+    * single output action runs — the production shape, where a 100 TB
+    * curation run cannot afford four extra passes just to report its
+    * funnel. The one persist remains (a shared subplan — the LSH bands,
+    * the two pair-side joins, each fetching signature and text at once,
+    * and the survivors all read the exact-dedup result) but nothing
+    * forces it early; it materializes inside the one action, firing the
+    * observe nodes exactly once. Its caller owns the action, the reads
+    * of the observations and the `release()` of the cache; [[curate]]
+    * is that owner.
     *
     * Precondition: `doc_id`s are unique. The left-anti join drops EVERY
     * row whose `doc_id` equals a verified pair's `doc_b`, so two texts
@@ -103,9 +108,7 @@ object Pipeline {
     // otherwise inline the score — and the scrub under it — into a
     // Filter below the scrub, running the PII regexes and the score
     // again for every document.
-    val scored = docs
-      .withColumn("text", graft.etl.Sanitize.redactPii(col("text")))
-      .withColumn("quality_score", TextAnalysis.qualityScore(col("text")))
+    val scored = scrubAndScore(docs)
       .observe(oIn, rows)
       .filter(col("quality_score") >= minQuality)
       .observe(oQ, rows,
@@ -137,6 +140,10 @@ object Pipeline {
       () => exact.unpersist(): Unit)
   }
 
+  private def scrubAndScore(docs: DataFrame): DataFrame = docs
+    .withColumn("text", graft.etl.Sanitize.redactPii(col("text")))
+    .withColumn("quality_score", TextAnalysis.qualityScore(col("text")))
+
   /** Demo main: curate the documents table, print the funnel, write
     * the curated corpus.
     *   sbt "runMain graft.Pipeline /root/testdata/sf0.01 /tmp/curated"
@@ -153,8 +160,8 @@ object Pipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (curated, report) = curate(Tables.documents(spark, sfDir))
-    curated.write.mode("overwrite").parquet(outDir)
+    val report = curate(Tables.documents(spark, sfDir))(
+      _.write.mode("overwrite").parquet(outDir))
     println(s"""{"input":${report.input},"after_quality":${report.afterQuality},""" +
       s""""after_exact_dedup":${report.afterExact},"after_near_dedup":${report.afterNear},""" +
       s""""after_sample":${report.afterSample},"out":"$outDir"}""")

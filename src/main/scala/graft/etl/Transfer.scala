@@ -371,12 +371,12 @@ object Transfer {
     val selected = metas.filterNot(m => exclude.contains(m.qualifiedName))
       .map(new Migration(_))
     // The row count and the serial maxima ride an observe() node on the
-    // write's own action (the Pipeline.curateObserved pattern, zero
-    // extra action): a count() or MAX job would re-execute the source
-    // read (VERDICT r10 #1).
-    // CONTRACT (same as curateObserved): `write` must execute exactly
-    // one Spark action over the frame it is given — every real sink
-    // (JDBC batch insert, parquet, noop) does.
+    // write's own action (zero extra action): a count() or MAX job would
+    // re-execute the source read (VERDICT r10 #1). `write` must execute
+    // exactly one Spark action over the frame it is given — every real
+    // sink (JDBC batch insert, parquet, noop) does; `graft.Observed`
+    // turns a zero-action writer into a per-table error after 30 s, the
+    // contract `Pipeline.curate`'s sink has too.
     def copy(t: Migration, df: DataFrame): Unit = {
       val (m, obs) = (t.meta, new Observation())
       // an empty table has no MAX: 0 maps to setvalSql's empty form
@@ -384,20 +384,9 @@ object Transfer {
         coalesce(max(df(c.name)).cast("long"), lit(0L)).as(s"max$i")
       }
       write(m, df.observe(obs, count(lit(1)).as("rows"), maxima: _*))
-      // once `write` has returned, the action either already ran
-      // (the future is complete) or never will — so a bounded wait
-      // turns a zero-action writer into a loud per-table error
-      // instead of an indefinite hang
-      try scala.concurrent.Await.ready(obs.future,
-        scala.concurrent.duration.Duration(30, "s"))
-      catch { case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"migrate(${m.qualifiedName}): no observed metrics " +
-            "after 30s — the supplied `write` must run exactly " +
-            "one Spark action over the frame it is given")
-      }
-      t.rows = obs.get("rows").asInstanceOf[Long]
-      t.maxima = maxima.indices.map(i => obs.get(s"max$i").asInstanceOf[Long])
+      val got = graft.Observed.metrics(obs, s"migrate(${m.qualifiedName})", "write")
+      t.rows = got("rows").asInstanceOf[Long]
+      t.maxima = maxima.indices.map(i => got(s"max$i").asInstanceOf[Long])
     }
     // a per-call pool, not a shared one: its threads are created here,
     // on the caller's thread, which is what hands them its local

@@ -1,9 +1,24 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs a curation whose sink collects the curated rows: the sink's
+    * one action. */
+  private def collected(curate: (DataFrame => Unit) => Pipeline.CurationReport)
+      : (Array[Row], Pipeline.CurationReport) = {
+    var rows = Array.empty[Row]
+    val report = curate(df => rows = df.collect())
+    (rows, report)
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def caches = org.apache.spark.sql.shim.CachedEntries(spark)
 
   test("curation funnel removes planted low-quality and duplicate docs") {
     val good = "the catalyst optimizer rewrites logical plans into " +
@@ -16,9 +31,9 @@ class PipelineSpec extends SparkSpec {
       (5L, "the quick brown fox jumps over a lazy dog and the day is long " +
         "and of the morning a walk to the river is the best of plans"))
       .toDF("doc_id", "text")
-    val (curated, report) = Pipeline.curate(docs,
-      minQuality = 0.4, nearDupJaccard = 0.7)
-    val ids = curated.select("doc_id").collect().map(_.getLong(0)).toSet
+    val (curated, report) = collected(Pipeline.curate(docs,
+      minQuality = 0.4, nearDupJaccard = 0.7))
+    val ids = curated.map(_.getAs[Long]("doc_id")).toSet
     assert(report.input == 5)
     assert(!ids.contains(4L), "garbage doc survived the quality filter")
     assert(!ids.contains(2L), "exact duplicate survived")
@@ -27,8 +42,8 @@ class PipelineSpec extends SparkSpec {
     assert(report.afterQuality >= report.afterExact &&
       report.afterExact >= report.afterNear)
     // survivors carry fingerprints + content hash
-    assert(curated.filter(size(col("fingerprints")) === 0).count() == 0)
-    assert(curated.filter(length(col("content_hash")) =!= 64).count() == 0)
+    assert(curated.count(_.getAs[Seq[Long]]("fingerprints").isEmpty) == 0)
+    assert(curated.count(_.getAs[String]("content_hash").length != 64) == 0)
   }
 
   test("curation drops an empty and a NULL text at the quality filter") {
@@ -38,10 +53,10 @@ class PipelineSpec extends SparkSpec {
       "long and of the morning a walk to the river is the best of plans"
     val docs = Seq((1L, Some(good)), (2L, Some("")), (3L, None))
       .toDF("doc_id", "text")
-    val (curated, report) = Pipeline.curate(docs)
+    val (curated, report) = collected(Pipeline.curate(docs))
     assert(report.input == 3)
     assert(report.afterQuality == 1)
-    assert(curated.select("doc_id").as[Long].collect().toSeq == Seq(1L))
+    assert(curated.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L))
   }
 
   test("exact dedup keeps one row per content hash under a repeated doc_id") {
@@ -55,9 +70,9 @@ class PipelineSpec extends SparkSpec {
     val tB = "a column store keeps each attribute in its own file and the " +
       "scan reads only the columns that the query of the day needs"
     val docs = Seq((1L, t1), (1L, tA), (2L, t1), (3L, tB)).toDF("doc_id", "text")
-    val (curated, report) = Pipeline.curate(docs, minQuality = 0.0)
+    val (curated, report) = collected(Pipeline.curate(docs, minQuality = 0.0))
     assert(report.input == 4 && report.afterExact == 3, report)
-    val out = curated.select("doc_id").as[Long].collect().groupBy(identity)
+    val out = curated.map(_.getAs[Long]("doc_id")).groupBy(identity)
       .map { case (id, ids) => id -> ids.length }
     val in = Map(1L -> 2, 2L -> 1, 3L -> 1)
     assert(out.forall { case (id, n) => n <= in.getOrElse(id, 0) }, out)
@@ -89,45 +104,49 @@ class PipelineSpec extends SparkSpec {
 
   test("curation scrubs PII and applies deterministic stratified sampling") {
     val docs = Tables.documents(spark, sf)
-    val (_, r) = Pipeline.curate(docs,
-      sampleRates = Map("en" -> 0.5), defaultSampleRate = 0.2)
+    val r = Pipeline.curate(docs,
+      sampleRates = Map("en" -> 0.5), defaultSampleRate = 0.2)(noop)
     assert(r.afterSample < r.afterNear, "sampling removed nothing")
-    val (_, r2) = Pipeline.curate(docs,
-      sampleRates = Map("en" -> 0.5), defaultSampleRate = 0.2)
+    val r2 = Pipeline.curate(docs,
+      sampleRates = Map("en" -> 0.5), defaultSampleRate = 0.2)(noop)
     assert(r2.afterSample == r.afterSample, "sample not deterministic")
     // planted email is scrubbed before anything downstream sees it
     val pii = Seq((9001L, "the of and a to reach me at bob@example.com " +
       "for the plan of the day and the rest of the story of the trip"))
       .toDF("doc_id", "text")
-    val (c3, _) = Pipeline.curate(pii, minQuality = 0.0)
-    val text = c3.select("text").head().getString(0)
+    val (c3, _) = collected(Pipeline.curate(pii, minQuality = 0.0))
+    val text = c3.head.getAs[String]("text")
     assert(text.contains("<EMAIL>") && !text.contains("bob@example.com"))
   }
 
   test("balanced mixing caps every source in the curated output") {
     val docs = Tables.documents(spark, sf)
-    val (curated, r) = Pipeline.curate(docs, maxPerSource = 5)
-    val perSource = curated.groupBy("source").count().collect()
+    var perSource = Array.empty[Row]
+    val r = Pipeline.curate(docs, maxPerSource = 5) { curated =>
+      perSource = curated.groupBy("source").count().collect()
+    }
     assert(perSource.forall(_.getAs[Long]("count") <= 5L),
       "a source exceeded the mixing cap")
     assert(r.afterSample < r.afterNear, "the cap removed nothing")
-    val (_, r2) = Pipeline.curate(docs, maxPerSource = 5)
+    val r2 = Pipeline.curate(docs, maxPerSource = 5)(noop)
     assert(r2.afterSample == r.afterSample, "mixing cap not deterministic")
   }
 
   test("pipeline is idempotent: curating a curated corpus removes nothing") {
     val docs = Tables.documents(spark, sf)
-    val (curated, r1) = Pipeline.curate(docs)
-    val (_, r2) = Pipeline.curate(curated.select("doc_id", "text",
-      "lang", "source", "n_chars"))
+    val dir = java.nio.file.Files.createTempDirectory("curated").toString
+    val r1 = Pipeline.curate(docs)(
+      _.write.mode("overwrite").parquet(dir))
+    val r2 = Pipeline.curate(spark.read.parquet(dir).select("doc_id", "text",
+      "lang", "source", "n_chars"))(noop)
     assert(r2.input == r1.afterNear)
     assert(r2.afterNear == r2.input, "second pass removed documents")
   }
 
-  test("a curation whose count fails leaves no cache behind") {
-    // the action fails on one row: doc 3's text raises inside the
-    // cached exact-dedup plan, so the exact-dedup cache is already
-    // registered when the count throws
+  test("a curation whose sink throws leaves no cache behind") {
+    // the sink's action fails on one row: doc 3's text raises inside
+    // the cached exact-dedup plan, so the exact-dedup cache is already
+    // registered when the sink throws
     val good = "the catalyst optimizer rewrites logical plans into " +
       "physical plans of the engine and a broadcast join is the fast path"
     val docs = Seq((1L, good), (2L, good.replace("broadcast", "shuffle")),
@@ -135,12 +154,59 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(2) // not a LocalRelation fold
       .withColumn("text", when(col("doc_id") === 3L,
         raise_error(lit("planted failure"))).otherwise(col("text")))
-    def caches = org.apache.spark.sql.shim.CachedEntries(spark)
     val before = caches
-    val e = intercept[Exception](Pipeline.curate(docs, minQuality = 0.0))
+    val e = intercept[Exception](Pipeline.curate(docs, minQuality = 0.0)(noop))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("planted failure")), e)
     assert(caches == before, s"${caches - before} caches left behind")
+  }
+
+  test("a curation whose sink runs no action fails within the bounded wait") {
+    val docs = Seq((1L, "the quick brown fox jumps over a lazy dog and the " +
+      "day is long and of the morning a walk to the river is the best of " +
+      "plans")).toDF("doc_id", "text")
+    val before = caches
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](Pipeline.curate(docs)(_ => ()))
+    val waitedS = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.startsWith("curate: no observed metrics after 30s"), e)
+    assert(waitedS < 45, s"waited ${waitedS}s")
+    assert(caches == before, s"${caches - before} caches left behind")
+  }
+
+  test("curate starts exactly the jobs of its sink over the observed frame") {
+    val docs = Tables.documents(spark, sf)
+    val sc = spark.sparkContext
+    def jobs(group: String)(run: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try run finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val viaCurate = jobs("curate-jobs-curate") {
+      Pipeline.curate(docs)(noop)
+    }
+    val viaObserved = jobs("curate-jobs-observed") {
+      val oc = Pipeline.curateObserved(docs)
+      try noop(oc.curated) finally oc.release()
+    }
+    assert(viaCurate == viaObserved && viaCurate > 0, (viaCurate, viaObserved))
+  }
+
+  test("curation of a corpus that leaves the exact-dedup cache empty reports its funnel") {
+    // an empty exact-dedup cache drops out of the adaptive plan, with the
+    // three counts observed inside it
+    val garbage = Seq((1L, "!!! ??? ### $$$ %%% ^^^ &&& *** ((( )))"),
+      (2L, "### $$$ %%% ^^^ &&& *** ((( ))) !!! ???")).toDF("doc_id", "text")
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    Seq(garbage -> Pipeline.CurationReport(2, 0, 0, 0, 0),
+        empty -> Pipeline.CurationReport(0, 0, 0, 0, 0)).foreach {
+      case (docs, expected) =>
+        val before = caches
+        val (curated, report) = collected(Pipeline.curate(docs))
+        assert(report == expected)
+        assert(curated.isEmpty)
+        assert(caches == before, s"${caches - before} caches left behind")
+    }
   }
 
   test("fused near-dup pairs equal the two-stage estimate-then-verify pairs") {

@@ -643,6 +643,17 @@ class TransferSpec extends SparkSpec {
     assert(results(1).error.contains("sink refused"))
   }
 
+  test("migrate fails a table whose write runs no action after the bounded wait") {
+    val data = Seq(1L, 2L).toDF("id")
+    val results = Transfer.migrate(plainTables("idle_a", "idle_b", "idle_c"),
+      exclude = Set.empty, execDdl = _ => (), read = _ => data,
+      write = (m, df) => if (m.name != "idle_b") noopWrite(df))
+    assert(results.map(_.ok) == Seq(true, false, true), results)
+    assert(results.map(_.rows) == Seq(2L, 0L, 2L), results)
+    assert(results(1).error.exists(_.startsWith(
+      "migrate(public.idle_b): no observed metrics after 30s")), results(1))
+  }
+
   test("migrate leaves no copy thread alive when it returns") {
     val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
     val data = Seq(1L).toDF("id")
